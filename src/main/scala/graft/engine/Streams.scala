@@ -51,6 +51,20 @@ object Streams {
     w.foreachBatch(action).start()
   }
 
+  /** Multi-table fan-out of one micro-batch: cache it once, hand each
+    * sink its non-empty slice (routing column dropped) — N cheap scans of
+    * one in-memory batch, not N source scans — then release the cache. */
+  private[engine] def fanOut(batch: DataFrame, sinks: Map[String, MergeSink],
+      tableCol: String)(apply: (MergeSink, DataFrame) => Unit): Unit = {
+    val cached = batch.persist()
+    try {
+      sinks.foreach { case (name, sink) =>
+        val slice = cached.filter(col(tableCol) === name).drop(tableCol)
+        if (!slice.isEmpty) apply(sink, slice)
+      }
+    } finally { cached.unpersist(); () }
+  }
+
   /** Deterministic default checkpoint for a multi-table processor: derived
     * from the lexicographically smallest table name, so it cannot drift
     * with Map iteration order between runs (which would silently abandon
@@ -205,7 +219,7 @@ final class UpsertStream(
     defaultCheckpoint: String) {
 
   def this(spark: SparkSession, config: IngestConfig, target: TargetTable) =
-    this(config, new ParquetTarget(spark, target, config.leaseSettleMillis),
+    this(config, new ParquetTarget(spark, target),
       target.path + "_ckpt")
 
   def run(source: DataFrame): StreamingQuery = runWith(source, None)
@@ -229,7 +243,7 @@ final class DeleteStream(
 
   def this(spark: SparkSession, config: IngestConfig, target: TargetTable,
       soft: Boolean = true) =
-    this(config, new ParquetTarget(spark, target, config.leaseSettleMillis),
+    this(config, new ParquetTarget(spark, target),
       target.path + "_del_ckpt", soft)
 
   def run(source: DataFrame): StreamingQuery = runWith(source, None)
@@ -258,7 +272,7 @@ final class VectoredDeleteStream(
     defaultCheckpoint: String) {
 
   def this(spark: SparkSession, config: IngestConfig, table: TargetTable) =
-    this(config, new ParquetTarget(spark, table, config.leaseSettleMillis),
+    this(config, new ParquetTarget(spark, table),
       table.path + "_vdel_ckpt")
 
   def run(source: DataFrame): StreamingQuery = runWith(source, None)
@@ -293,7 +307,7 @@ final class MultiTableUpsertStream(
       tableCol: String = IngestContract.TableCol) =
     this(config,
       catalog.map { case (n, t) =>
-        (n, new ParquetTarget(spark, t, config.leaseSettleMillis): MergeSink) },
+        (n, new ParquetTarget(spark, t): MergeSink) },
       Streams.multiCheckpoint(catalog, "_multi_ckpt"), tableCol)
 
   def run(source: DataFrame): StreamingQuery = runWith(source, None)
@@ -303,13 +317,7 @@ final class MultiTableUpsertStream(
   private def runWith(source: DataFrame, trigger: Option[Trigger]): StreamingQuery =
     Streams.start(source, config, defaultCheckpoint, trigger) {
       (batch: Dataset[Row], _: Long) =>
-        val cached = batch.persist()
-        try {
-          sinks.foreach { case (name, sink) =>
-            val slice = cached.filter(col(tableCol) === name).drop(tableCol)
-            if (!slice.isEmpty) sink.mergeUpsert(slice, config)
-          }
-        } finally { cached.unpersist(); () }
+        Streams.fanOut(batch, sinks, tableCol)(_.mergeUpsert(_, config))
     }
 }
 
@@ -332,7 +340,7 @@ final class MultiTableDeleteStream(
       soft: Boolean = true) =
     this(config,
       catalog.map { case (n, t) =>
-        (n, new ParquetTarget(spark, t, config.leaseSettleMillis): MergeSink) },
+        (n, new ParquetTarget(spark, t): MergeSink) },
       Streams.multiCheckpoint(catalog, "_multi_del_ckpt"), tableCol, soft)
 
   def run(source: DataFrame): StreamingQuery = runWith(source, None)
@@ -342,16 +350,10 @@ final class MultiTableDeleteStream(
   private def runWith(source: DataFrame, trigger: Option[Trigger]): StreamingQuery =
     Streams.start(source, config, defaultCheckpoint, trigger) {
       (batch: Dataset[Row], _: Long) =>
-        val cached = batch.persist()
-        try {
-          sinks.foreach { case (name, sink) =>
-            val slice = cached.filter(col(tableCol) === name).drop(tableCol)
-            if (!slice.isEmpty) {
-              if (soft) sink.mergeSoftDelete(slice, config)
-              else sink.mergeHardDelete(slice, config)
-            }
-          }
-        } finally { cached.unpersist(); () }
+        Streams.fanOut(batch, sinks, tableCol) { (sink, slice) =>
+          if (soft) sink.mergeSoftDelete(slice, config)
+          else sink.mergeHardDelete(slice, config)
+        }
     }
 }
 

@@ -79,7 +79,9 @@ final case class TargetTable(
   * controls. Tokio-shaped knobs (channel buffers, per-arity sender pools,
   * connection-creation thresholds) have no Spark analog by design — Spark's
   * scheduler + micro-batch admission control replaces the hand-rolled pool
-  * (SURVEY.md §2 O8–O10).
+  * (SURVEY.md §2 O8–O10). The parquet target's single-writer lease has
+  * no setting either: its token read-back runs on every store without an
+  * atomic create-exclusive (see `ParquetTarget.withCommitLock`).
   *
   * @param maxWriterPartitions writer parallelism cap — reference
   *                            `max_con_count` (DB connection cap)
@@ -90,15 +92,6 @@ final case class TargetTable(
   *                            `introduced_lag_cycles` ×
   *                            `introduced_lag_in_millies` (`src/lib.rs:60-64`);
   *                            product = the micro-batch trigger interval
-  * @param leaseSettleMillis pause before the writer-lease token read-back on
-  *                          filesystems whose create-exclusive is NOT atomic
-  *                          (local FS, object stores). Default 0: single-writer
-  *                          deployments (the supported contract) should not tax
-  *                          every micro-batch commit. If you cannot rule out a
-  *                          second concurrent writer on such a store, set
-  *                          ~50–100 ms so a racing overwrite lands before the
-  *                          read-back — this shrinks the race window, it does
-  *                          not close it (see ParquetTarget.withCommitLock)
   */
 final case class IngestConfig(
     name: String = "graft-ingest",
@@ -107,14 +100,12 @@ final case class IngestConfig(
     lagCycles: Int = 1,
     lagMillis: Long = 10L,
     checkpointDir: Option[String] = None,
-    printConfig: Boolean = false,
-    leaseSettleMillis: Long = 0L) {
+    printConfig: Boolean = false) {
   require(name.nonEmpty, "name must not be empty")
   require(maxWriterPartitions > 0, "maxWriterPartitions must be > 0")
   require(maxRecordsPerTrigger > 0, "maxRecordsPerTrigger must be > 0")
   require(lagCycles > 0, "lagCycles must be > 0")
   require(lagMillis >= 0, "lagMillis must be >= 0")
-  require(leaseSettleMillis >= 0, "leaseSettleMillis must be >= 0")
 
   /** Trigger interval = debounce budget, like the reference's lag-cycle
     * accumulation loop (`src/upsert.rs:143-207`). */

@@ -2,10 +2,10 @@ package graft.sink
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, count, hash, input_file_name, lit, max, min, pmod, regexp_extract}
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructType}
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, hash, lit, max, min, pmod, regexp_extract}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 
 import graft.model.{IngestConfig, TargetTable}
 import graft.ops.Dedup
@@ -23,6 +23,8 @@ import graft.ops.Dedup
   *   table.path/
   *     _LATEST                     <- name of the current manifest file
   *     m0000000002                 <- manifest: "<bucket>\t<dir>" lines
+  *     z0000000002                 <- zone map: "<bucket>\t<min>\t<max>"
+  *     x0000000002/                <- deletion vector (vectored deletes)
   *     d0000000001/                <- delta of version 1 (_SUCCESS marker)
   *       __graft_bucket=0/...parquet
   *       __graft_bucket=3/...parquet
@@ -36,6 +38,22 @@ import graft.ops.Dedup
   * reference. Bucket count is `TargetTable.buckets`; Spark `hash`
   * (Murmur3) over the key columns assigns buckets on both the read and
   * write side, so merge planning never shuffles the target.
+  *
+  * One snapshot per operation: every public method resolves the committed
+  * (version, manifest) pair ONCE — one `_LATEST` read, one manifest parse,
+  * one dir-existence pass ([[snapshot]]) — and takes its slice, schema,
+  * zone map and deletion vector from that version; `commit` publishes
+  * the version after the one it was handed. An operation therefore never
+  * pairs one version's manifest with another version's sidecar, and a
+  * merge pays for one resolution, not one per helper.
+  *
+  * Metadata protocol, each rule in one place: [[readText]] reads a small
+  * metadata file, [[publishFile]] publishes one atomically (tmp file,
+  * stale destination deleted, rename checked), [[listVersioned]] lists the
+  * root's `m`/`z`/`x`/`d` names. [[publishVersion]] is the one path a new
+  * version becomes visible through — zone sidecar, manifest, `_LATEST`
+  * repoint, GC — shared by `commit`, `rollbackTo` and `cloneTo` (which
+  * publishes through a target on the clone root).
   *
   * Crash safety (no window loses committed state):
   *  - crash while writing a delta: no manifest references it; the next
@@ -63,30 +81,68 @@ import graft.ops.Dedup
   * `IngestConfig.maxWriterPartitions`, the analog of the reference's
   * DB-connection cap (`max_con_count`, quick_stream `src/builder.rs:14-33`).
   */
-final class ParquetTarget(spark: SparkSession, val table: TargetTable,
-    leaseSettleMillis: Long = 0L) extends MergeSink {
+final class ParquetTarget(spark: SparkSession, val table: TargetTable)
+    extends MergeSink {
+  import ParquetTarget.Snapshot
 
   private val root = new Path(table.path)
   private val pointer = new Path(root, "_LATEST")
-  private val pointerTmp = new Path(root, "_LATEST.tmp")
   private val lockPath = new Path(root, "_LOCK")
   private val BucketCol = "__graft_bucket"
   private val DvFileCol = "__graft_dv_file"
   private val DvPosCol = "__graft_dv_pos"
   private val DvBucketCol = "__graft_dv_bucket"
+  private val dvSchema =
+    StructType(Seq(StructField(DvFileCol, StringType), StructField(DvPosCol, LongType)))
 
   private def fs: FileSystem =
     root.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def versionOf(prefix: Char, name: String): Long =
-    if (name.length == 11 && name.head == prefix && name.drop(1).forall(_.isDigit))
-      name.drop(1).toLong
-    else -1L
+  private def nameOf(kind: Char, v: Long): String = f"$kind$v%010d"
+  private def pathOf(kind: Char, v: Long): Path = new Path(root, nameOf(kind, v))
 
-  private def manifestName(v: Long): String = f"m$v%010d"
-  private def deltaName(v: Long): String = f"d$v%010d"
-  private def zoneName(v: Long): String = f"z$v%010d"
-  private def dvName(v: Long): String = f"x$v%010d"
+  /** (kind, version) of a versioned root entry: `m` manifest, `z` zone
+    * map, `x` deletion vector or `d` delta, plus 10 digits. */
+  private def parseVersioned(name: String): Option[(Char, Long)] =
+    if (name.length == 11 && "mzxd".contains(name.head) && name.drop(1).forall(_.isDigit))
+      Some(name.head -> name.drop(1).toLong)
+    else None
+
+  /** Every versioned entry of the root as (kind, version, path), from ONE
+    * listing; Nil before the first commit. */
+  private def listVersioned(): Seq[(Char, Long, Path)] =
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq.flatMap { s =>
+      parseVersioned(s.getPath.getName).map { case (k, v) => (k, v, s.getPath) }
+    }
+
+  private def versionsOf(kind: Char): Seq[Long] =
+    listVersioned().collect { case (k, v, _) if k == kind => v }
+
+  /** Text of a small metadata file; None when it does not exist. */
+  private def readText(p: Path): Option[String] =
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
+        StandardCharsets.UTF_8))
+      finally in.close()
+    }
+
+  /** Publish `text` at `p` atomically: write a tmp file, delete a stale
+    * destination, rename. Rename results are checked: on HDFS a rename
+    * onto an existing destination returns false instead of overwriting (a
+    * replayed commit hits this), so the stale destination goes first and
+    * a false return is an error, never silence. */
+  private def publishFile(p: Path, text: String): Unit = {
+    val tmp = new Path(p.getParent, p.getName + ".tmp")
+    val out = fs.create(tmp, true)
+    try out.write(text.getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+    if (fs.exists(p)) fs.delete(p, false)
+    if (!fs.rename(tmp, p))
+      throw new IllegalStateException(s"failed to publish $p")
+  }
 
   private def bucketOf(df: DataFrame): Column =
     pmod(hash(table.hashCols.map(df.col): _*), lit(table.buckets))
@@ -97,56 +153,40 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     * existing table with a different `TargetTable.buckets` fails loud —
     * silently hashing mod a different count would prune the wrong buckets
     * and corrupt latest-wins state. */
-  private def readManifest(v: Long): Option[Map[Int, String]] = {
-    val p = new Path(root, manifestName(v))
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val text =
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        StandardCharsets.UTF_8)
-      finally in.close()
-    val lines = text.split("\n").toSeq.filter(_.nonEmpty)
-    lines.find(_.startsWith("#buckets=")).foreach { h =>
-      val stored = h.stripPrefix("#buckets=").toInt
-      if (stored != table.buckets)
-        throw new IllegalStateException(
-          s"target ${table.name} was created with $stored buckets but " +
-            s"TargetTable.buckets is ${table.buckets} — bucket count is " +
-            "immutable once written (rebuild the table to change it)")
+  private def readManifest(v: Long): Option[Map[Int, String]] =
+    readText(pathOf('m', v)).flatMap { text =>
+      val lines = text.split("\n").toSeq.filter(_.nonEmpty)
+      lines.find(_.startsWith("#buckets=")).foreach { h =>
+        val stored = h.stripPrefix("#buckets=").toInt
+        if (stored != table.buckets)
+          throw new IllegalStateException(
+            s"target ${table.name} was created with $stored buckets but " +
+              s"TargetTable.buckets is ${table.buckets} — bucket count is " +
+              "immutable once written (rebuild the table to change it)")
+      }
+      val entries = lines.filterNot(_.startsWith("#")).map { line =>
+        val Array(b, dir) = line.split("\t", 2)
+        b.toInt -> dir
+      }.toMap
+      if (entries.values.forall(d => fs.exists(new Path(root, d)))) Some(entries)
+      else None
     }
-    val entries = lines.filterNot(_.startsWith("#")).map { line =>
-      val Array(b, dir) = line.split("\t", 2)
-      b.toInt -> dir
-    }.toMap
-    if (entries.values.forall(d => fs.exists(new Path(root, d)))) Some(entries)
-    else None
-  }
 
-  /** The committed version: what `_LATEST` names if that manifest is
-    * intact, else (crash recovery) the highest intact manifest on disk. */
-  private def currentVersion(): Option[Long] = {
-    if (!fs.exists(root)) return None
-    val pointed =
-      if (fs.exists(pointer)) {
-        val in = fs.open(pointer)
-        val name =
-          try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-            StandardCharsets.UTF_8).trim
-          finally in.close()
-        Some(versionOf('m', name)).filter(_ >= 0).filter(readManifest(_).isDefined)
-      } else None
-    pointed.orElse {
-      val vs = fs.listStatus(root).toSeq
-        .map(s => versionOf('m', s.getPath.getName))
-        .filter(v => v >= 0 && readManifest(v).isDefined)
-      if (vs.isEmpty) None else Some(vs.max)
-    }
-  }
+  private def snapshotAt(v: Long): Option[Snapshot] =
+    readManifest(v).map(Snapshot(v, _))
 
-  def exists: Boolean = currentVersion().isDefined
+  /** The committed snapshot: the version `_LATEST` names if that manifest
+    * is intact, else (crash recovery) the highest intact manifest on disk.
+    * The only reader of `_LATEST`; public operations call it once. */
+  private def snapshot(): Option[Snapshot] =
+    readText(pointer).flatMap(n => parseVersioned(n.trim))
+      .collect { case ('m', v) => v }.flatMap(snapshotAt)
+      .orElse(versionsOf('m').sorted.reverseIterator.flatMap(snapshotAt).nextOption())
 
-  private def current(): Option[Map[Int, String]] =
-    currentVersion().flatMap(readManifest)
+  private def nonEmptySnapshot(): Option[Snapshot] =
+    snapshot().filter(_.manifest.nonEmpty)
+
+  def exists: Boolean = snapshot().isDefined
 
   /** Snapshot schema per committed version (schemas are uniform across a
     * version's files by the migration invariant, and a committed
@@ -172,6 +212,12 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     s
   }
 
+  /** Uniform schema of a snapshot (invariant: every file a version
+    * references shares it — migrations rewrite all buckets). The cache is
+    * keyed by the version whose dirs are read, which a [[Snapshot]] keeps
+    * paired by construction. */
+  private def schemaOf(s: Snapshot): StructType = schemaAt(s.version, s.dirs.head)
+
   private def readDirs(dirs: Seq[String],
       schema: Option[StructType] = None): DataFrame = {
     val reader = schema.fold(spark.read)(s => spark.read.schema(s))
@@ -185,13 +231,8 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     * file paths, so stale DV entries simply stop matching — they can
     * never delete a row they didn't mark). Versions BEFORE w read the
     * previous sidecar (or none): time travel sees pre-delete rows. */
-  private def dvVersionFor(v: Long): Option[Long] = {
-    if (!fs.exists(root)) return None
-    fs.listStatus(root).toSeq
-      .map(s => versionOf('x', s.getPath.getName))
-      .filter(x => x >= 0 && x <= v)
-      .maxOption
-  }
+  private def dvVersionFor(v: Long): Option[Long] =
+    versionsOf('x').filter(_ <= v).maxOption
 
   /** Snapshot read at version `v` with merge-on-read deletion vectors:
     * the raw multi-dir scan, anti-joined against the applicable DV
@@ -213,7 +254,7 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     * (partition pruning on [[DvBucketCol]]) — a reader of one bucket
     * never pays for a corpus-wide delete's full position set. */
   private def readDv(x: Long, buckets: Option[Seq[Int]] = None): DataFrame = {
-    val dv = spark.read.parquet(new Path(root, dvName(x)).toString)
+    val dv = spark.read.parquet(pathOf('x', x).toString)
     val pruned = buckets match {
       case Some(bs) if dv.columns.contains(DvBucketCol) =>
         dv.filter(col(DvBucketCol).isin(bs: _*))
@@ -245,21 +286,13 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     }
   }
 
-  /** Current (version, manifest) pair — the read sites that apply
-    * deletion vectors need both. */
-  private def currentVm(): Option[(Long, Map[Int, String])] =
-    currentVersion().flatMap(v => readManifest(v).map(v -> _))
-
   def read(): Option[DataFrame] =
-    currentVm().filter(_._2.nonEmpty).map { case (v, m) =>
-      readDirsDv(m.values.toSeq.distinct, v)
-    }
+    nonEmptySnapshot().map(s => readDirsDv(s.dirs, s.version))
 
   /** Time travel: the snapshot a specific committed version published;
     * None once GC'd past `TargetTable.retainVersions` (or never existed). */
   def readVersion(v: Long): Option[DataFrame] =
-    readManifest(v).filter(_.nonEmpty)
-      .map(m => readDirsDv(m.values.toSeq.distinct, v))
+    snapshotAt(v).filter(_.manifest.nonEmpty).map(s => readDirsDv(s.dirs, v))
 
   /** Change data feed between two committed versions (CDC): the keyed
     * diff from → to, one row per inserted, updated, or deleted key with
@@ -297,18 +330,18 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
       // A vectored delete changes NO bucket dirs — its changes hide in
       // the deletion-vector delta. Map the delta's file paths back to
       // their bucket dirs and diff those too (still O(changes), the DV
-      // names exactly the touched files).
+      // names exactly the touched files). The delta runs both ways:
+      // positions marked only at `toVersion` were deleted, positions
+      // marked only at `fromVersion` were restored (a rollback past a
+      // vectored delete).
       val dvHitDirs: Seq[String] = {
         val dvFrom = dvVersionFor(fromVersion)
         val dvTo = dvVersionFor(toVersion)
         if (dvFrom == dvTo) Nil
         else {
-          val newDv = readDv(dvTo.get)
-          val delta = dvFrom match {
-            case Some(x) => newDv.join(readDv(x),
-              Seq(DvFileCol, DvPosCol), "left_anti")
-            case None => newDv
-          }
+          val marks = (x: Option[Long]) => x.fold(emptyWithSchema(dvSchema))(readDv(_))
+          val (oldDv, newDv) = (marks(dvFrom), marks(dvTo))
+          val delta = newDv.except(oldDv).union(oldDv.except(newDv))
           val dirByQualified = (mo.values ++ mn.values).toSeq.distinct
             .map(d => fs.makeQualified(new Path(root, d)).toString -> d)
             .toMap
@@ -326,9 +359,7 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
       val anyDirs = (mn ++ mo).values.toSeq.distinct
       if (anyDirs.isEmpty)
         // table empty at both versions: empty feed, marker column only
-        emptyWithSchema(StructType(Seq(
-          org.apache.spark.sql.types.StructField(
-            "_change_type", org.apache.spark.sql.types.StringType))))
+        emptyWithSchema(StructType(Seq(StructField("_change_type", StringType))))
       else {
         // each side's frame is built ONCE (driver-side file listing +
         // parquet footer reads happen per readDirs call); each side
@@ -345,8 +376,8 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
         // migration or stamped the feed with a later schema (r13 advice).
         val schema = newFrame.orElse(oldFrame).map(_.schema)
           .getOrElse(
-            if (mn.nonEmpty) schemaAt(toVersion, mn.values.toSeq.distinct.head)
-            else schemaAt(fromVersion, mo.values.toSeq.distinct.head))
+            if (mn.nonEmpty) schemaOf(Snapshot(toVersion, mn))
+            else schemaOf(Snapshot(fromVersion, mo)))
         for { of <- oldFrame; _ <- newFrame } require(of.schema == schema,
           s"readChanges across a schema migration is unsupported: version " +
             s"$fromVersion schema ${of.schema} != version $toVersion schema $schema")
@@ -384,17 +415,7 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     * min(b, touched-bucket) dirs of the table, not the table. The key
     * set is broadcast and matched with a left-semi join, so the scan
     * side never shuffles. None when the target does not exist. */
-  def lookup(keys: DataFrame): Option[DataFrame] =
-    currentVm().filter(_._2.nonEmpty).map { case (v, m) =>
-      val schema = currentSchema(v, m)
-      val bk = conformKeys(
-        keys.select(table.keyCols.map(keys.col): _*).distinct(), schema)
-      val dirs = bucketsOf(bk).flatMap(m.get).distinct
-      if (dirs.isEmpty) emptyWithSchema(schema)
-      else readDirsDv(dirs, v).join(
-        org.apache.spark.sql.functions.broadcast(bk),
-        table.keyCols, "left_semi")
-    }
+  def lookup(keys: DataFrame): Option[DataFrame] = probe(keys, table.keyCols)
 
   /** Current rows of an explicit set of buckets — the read primitive a
     * data-skipping sidecar (zone map, Bloom index) resolves its pruning
@@ -402,10 +423,9 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     * table. Unknown bucket ids simply select nothing. None when the
     * target does not exist. */
   def readBuckets(bucketIds: Seq[Int]): Option[DataFrame] =
-    currentVm().filter(_._2.nonEmpty).map { case (v, m) =>
-      val schema = currentSchema(v, m)
-      val dirs = bucketIds.distinct.flatMap(m.get).distinct
-      if (dirs.isEmpty) emptyWithSchema(schema) else readDirsDv(dirs, v)
+    nonEmptySnapshot().map { s =>
+      val dirs = bucketIds.distinct.flatMap(s.manifest.get).distinct
+      if (dirs.isEmpty) emptyWithSchema(schemaOf(s)) else readDirsDv(dirs, s.version)
     }
 
   /** Equality lookup by the BUCKET columns alone
@@ -417,26 +437,22 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     * key set when no bucketCols were declared (then it equals
     * [[lookup]] semantics on the key prefix). */
   def lookupByBucketCols(vals: DataFrame): Option[DataFrame] =
-    currentVm().filter(_._2.nonEmpty).map { case (v, m) =>
-      val schema = currentSchema(v, m)
-      val bk = conformKeys(
-        vals.select(table.hashCols.map(vals.col): _*).distinct(), schema)
-      val dirs = bucketsOf(bk).flatMap(m.get).distinct
-      if (dirs.isEmpty) emptyWithSchema(schema)
-      else readDirsDv(dirs, v).join(
-        org.apache.spark.sql.functions.broadcast(bk),
-        table.hashCols, "left_semi")
+    probe(vals, table.hashCols)
+
+  /** Current rows whose `cols` values appear in `vals`: reads only the
+    * buckets the values hash into (`cols` covers the hash columns) and
+    * left-semi joins the broadcast value set. */
+  private def probe(vals: DataFrame, cols: Seq[String]): Option[DataFrame] =
+    nonEmptySnapshot().map { s =>
+      val (bk, dirs) = keyedDirs(s, vals.select(cols.map(vals.col): _*).distinct())
+      if (dirs.isEmpty) emptyWithSchema(schemaOf(s))
+      else readDirsDv(dirs, s.version).join(broadcast(bk), cols, "left_semi")
     }
 
   /** Intact (readable) committed versions, ascending — at most
     * `retainVersions` of them after any commit's GC. */
-  def versions(): Seq[Long] = {
-    if (!fs.exists(root)) return Nil
-    fs.listStatus(root).toSeq
-      .map(s => versionOf('m', s.getPath.getName))
-      .filter(v => v >= 0 && readManifest(v).isDefined)
-      .sorted
-  }
+  def versions(): Seq[Long] =
+    versionsOf('m').filter(readManifest(_).isDefined).sorted
 
   /** Per-bucket zone maps (min/max of the version column) of a committed
     * version — the data-skipping sidecar `commit` maintains for integral
@@ -445,20 +461,22 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     * read; presence is therefore purely an optimization, never a
     * correctness input. Empty map when no sidecar exists. */
   def zoneMaps(): Map[Int, (Long, Long)] =
-    currentVersion().map(readZones).getOrElse(Map.empty)
+    snapshot().flatMap(s => readZones(s.version)).getOrElse(Map.empty)
 
-  private def readZones(v: Long): Map[Int, (Long, Long)] = {
-    val p = new Path(root, zoneName(v))
-    if (!fs.exists(p)) return Map.empty
-    val in = fs.open(p)
-    val text =
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        StandardCharsets.UTF_8)
-      finally in.close()
-    text.split("\n").toSeq.filter(_.nonEmpty).map { line =>
+  /** Version `v`'s zone-map sidecar; None when it has none. */
+  private def readZones(v: Long): Option[Map[Int, (Long, Long)]] =
+    readText(pathOf('z', v)).map(_.split("\n").toSeq.filter(_.nonEmpty).map { line =>
       val Array(b, mn, mx) = line.split("\t", 3)
       b.toInt -> (mn.toLong, mx.toLong)
-    }.toMap
+    }.toMap)
+
+  /** Buckets of `s` whose recorded version bounds intersect [lo, hi];
+    * buckets without bounds are always chosen. */
+  private def bucketsInRange(s: Snapshot, lo: Long, hi: Long): Map[Int, String] = {
+    val zones = readZones(s.version).getOrElse(Map.empty)
+    s.manifest.filter { case (b, _) =>
+      zones.get(b).forall { case (mn, mx) => mx >= lo && mn <= hi }
+    }
   }
 
   /** Zone-map-pruned range scan: rows of the current snapshot whose
@@ -481,28 +499,20 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     * per-bucket version bands of long-lived rows are wide; that is the
     * honest limit of version zone maps under hash layout). */
   def readWhereVersionBetween(lo: Long, hi: Long): Option[DataFrame] =
-    currentVm().filter(_._2.nonEmpty).map { case (v, m) =>
-      val zones = zoneMaps()
-      val chosen = m.filter { case (b, _) =>
-        zones.get(b).forall { case (mn, mx) => mx >= lo && mn <= hi }
-      }
+    nonEmptySnapshot().map { s =>
+      val chosen = bucketsInRange(s, lo, hi)
       val vc = col(table.versionCol).cast("long")
-      if (chosen.isEmpty)
-        emptyWithSchema(currentSchema(v, m))
-      else
-        readDirsDv(chosen.values.toSeq.distinct, v)
-          .filter(vc >= lo && vc <= hi)
+      if (chosen.isEmpty) emptyWithSchema(schemaOf(s))
+      else readDirsDv(chosen.values.toSeq.distinct, s.version)
+        .filter(vc >= lo && vc <= hi)
     }
 
   /** Pruning audit for [[readWhereVersionBetween]]: (buckets_total,
     * buckets_read, buckets_skipped) at the current version. */
   def pruneAudit(lo: Long, hi: Long): Option[(Int, Int, Int)] =
-    current().filter(_.nonEmpty).map { m =>
-      val zones = zoneMaps()
-      val read = m.count { case (b, _) =>
-        zones.get(b).forall { case (mn, mx) => mx >= lo && mn <= hi }
-      }
-      (m.size, read, m.size - read)
+    nonEmptySnapshot().map { s =>
+      val read = bucketsInRange(s, lo, hi).size
+      (s.manifest.size, read, s.manifest.size - read)
     }
 
   /** Per-bucket row counts + owning delta dir of the current snapshot —
@@ -510,13 +520,13 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     * of the snapshot (bucket recovered from the file path), not a job
     * per bucket — thousands of buckets is the intended regime. */
   def stats(): Option[DataFrame] =
-    currentVm().filter(_._2.nonEmpty).map { case (v, m) =>
+    nonEmptySnapshot().map { s =>
       import spark.implicits._
-      val counts = readDirsWithMeta(m.values.toSeq.distinct, v)
+      val counts = readDirsWithMeta(s.dirs, s.version)
         .groupBy(regexp_extract(col(DvFileCol), s"$BucketCol=(\\d+)", 1)
           .cast("int").as("bucket"))
         .agg(count(lit(1)).as("n_rows"))
-      m.toSeq.toDF("bucket", "delta_dir")
+      s.manifest.toSeq.toDF("bucket", "delta_dir")
         .join(counts, Seq("bucket"), "left_outer")
         .na.fill(0L, Seq("n_rows"))
     }
@@ -541,9 +551,9 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     // reads through the deletion vector, so compaction MATERIALIZES
     // vectored deletes — the rewritten files carry no deleted rows and
     // the old DV entries dangle harmlessly against the retired paths
-    currentVm().filter(_._2.nonEmpty).foreach { case (v, m) =>
-      val cur = readDirsDv(m.values.toSeq.distinct, v)
-      commit(cur, Map.empty, config, onePerBucket = true,
+    nonEmptySnapshot().foreach { s =>
+      val cur = readDirsDv(s.dirs, s.version)
+      commit(s, cur, Map.empty, config, onePerBucket = true,
         sortWithin = clusterBy(cur))
     }
   }
@@ -590,46 +600,23 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     * `readManifest`'s existence validation turns a violated clone into
     * "no intact version" (loud), never silently partial data. */
   def cloneTo(destRoot: String): Unit = {
-    val m = current().getOrElse(throw new IllegalStateException(
+    val s = snapshot().getOrElse(throw new IllegalStateException(
       s"cannot clone ${table.name}: no committed version"))
-    val dest = new Path(destRoot)
-    val dfs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (dfs.exists(new Path(dest, "_LATEST")))
+    val dest = new ParquetTarget(spark, table.copy(path = destRoot))
+    if (dest.fs.exists(dest.pointer))
       throw new IllegalStateException(
         s"clone destination $destRoot already has a committed table")
-    dfs.mkdirs(dest)
-    val entries = m.map { case (b, d) =>
-      b -> new Path(root, d).toString
+    // The clone references the same immutable files, so the source's
+    // deletion-vector marks stay valid for it: copied (tiny), not
+    // referenced — the source may GC its sidecar on its own schedule.
+    dvVersionFor(s.version).foreach { x =>
+      FileUtil.copy(fs, pathOf('x', x), dest.fs, dest.pathOf('x', 1L), false,
+        spark.sparkContext.hadoopConfiguration)
     }
-    val mName = f"m${1L}%010d"
-    val mPath = new Path(dest, mName)
-    val out = dfs.create(mPath, true)
-    try out.write((s"#buckets=${table.buckets}" +:
-      entries.toSeq.sortBy(_._1).map { case (b, d) => s"$b\t$d" })
-      .mkString("\n").getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    // Carry the zone-map sidecar: the clone references the same files,
-    // so the source's per-bucket version bounds stay valid for it.
-    val zones = zoneMaps()
-    if (zones.nonEmpty) {
-      val zOut = dfs.create(new Path(dest, f"z${1L}%010d"), true)
-      try zOut.write(zones.toSeq.sortBy(_._1)
-        .map { case (b, (mn, mx)) => s"$b\t$mn\t$mx" }
-        .mkString("\n").getBytes(StandardCharsets.UTF_8))
-      finally zOut.close()
-    }
-    // Carry the applicable deletion-vector sidecar: the clone references
-    // the same immutable files, so the source's (file, position) marks
-    // stay valid. Copied (tiny), not referenced — the source may GC its
-    // sidecar on its own schedule.
-    currentVersion().flatMap(dvVersionFor).foreach { x =>
-      org.apache.hadoop.fs.FileUtil.copy(fs,
-        new Path(root, dvName(x)), dfs, new Path(dest, f"x${1L}%010d"),
-        false, spark.sparkContext.hadoopConfiguration)
-    }
-    val p = dfs.create(new Path(dest, "_LATEST"), true)
-    try p.write(mName.getBytes(StandardCharsets.UTF_8))
-    finally p.close()
+    // Same files, so the source's zone bounds stay valid for the clone too.
+    dest.publishVersion(1L,
+      s.manifest.map { case (b, d) => b -> new Path(root, d).toString },
+      readZones(s.version))
   }
 
   /** Row-level retention delete (TTL / compliance erasure): drop every
@@ -646,16 +633,16 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     * pre-delete version while `retainVersions` keeps it. */
   def deleteWhere(config: IngestConfig, pred: Column): Unit =
     withCommitLock {
-      currentVm().filter(_._2.nonEmpty).foreach { case (v, m) =>
-        val cur = readDirsDv(m.values.toSeq.distinct, v)
+      nonEmptySnapshot().foreach { s =>
+        val cur = readDirsDv(s.dirs, s.version)
         val matched = cur.filter(coalesce(pred, lit(false)))
         val hitB = matched.select(bucketOf(matched).as("__b")).distinct()
           .collect().map(_.getInt(0)).toSet
         if (hitB.nonEmpty) {
-          val hitDirs = m.filter { case (b, _) => hitB(b) }
-          val keep = readDirsDv(hitDirs.values.toSeq.distinct, v)
+          val hitDirs = s.manifest.filter { case (b, _) => hitB(b) }
+          val keep = readDirsDv(hitDirs.values.toSeq.distinct, s.version)
             .filter(!coalesce(pred, lit(false)))
-          commit(keep, m.view.filterKeys(b => !hitB(b)).toMap, config)
+          commit(s, keep, s.manifest.view.filterKeys(b => !hitB(b)).toMap, config)
         }
       }
     }
@@ -677,20 +664,9 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     * exactly like [[deleteWhere]]; no matches ⇒ no commit. */
   def deleteVectored(config: IngestConfig, pred: Column): Unit =
     withCommitLock {
-      currentVm().filter(_._2.nonEmpty).foreach { case (v, m) =>
-        val prior = dvVersionFor(v).map(x =>
-          readDv(x))
-        val matched = readDirsWithMeta(m.values.toSeq.distinct, v)
-          .filter(coalesce(pred, lit(false)))
-          .select(col(DvFileCol), col(DvPosCol)).persist()
-        try {
-          if (matched.limit(1).count() > 0) {
-            val merged = prior
-              .map(_.unionByName(matched)).getOrElse(matched).distinct()
-            commit(emptyWithSchema(currentSchema(v, m)), m, config,
-              dvOverride = Some(merged))
-          }
-        } finally { matched.unpersist(); () }
+      nonEmptySnapshot().foreach { s =>
+        commitDv(s, readDirsWithMeta(s.dirs, s.version)
+          .filter(coalesce(pred, lit(false))), config)
       }
     }
 
@@ -703,48 +679,45 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     * (idempotent replay-safe). */
   def deleteVectoredKeys(keys: DataFrame, config: IngestConfig): Unit =
     withCommitLock {
-      currentVm().filter(_._2.nonEmpty).foreach { case (v, m) =>
-        val schema = currentSchema(v, m)
-        val bk = conformKeys(
-          keys.select(table.keyCols.map(keys.col): _*).distinct(), schema)
-        val dirs = bucketsOf(bk).flatMap(m.get).distinct
-        if (dirs.nonEmpty) {
-          val prior = dvVersionFor(v).map(x =>
-            readDv(x))
-          val matched = readDirsWithMeta(dirs, v)
-            .join(org.apache.spark.sql.functions.broadcast(bk),
-              table.keyCols, "left_semi")
-            .select(col(DvFileCol), col(DvPosCol)).persist()
-          try {
-            if (matched.limit(1).count() > 0) {
-              val merged = prior
-                .map(_.unionByName(matched)).getOrElse(matched).distinct()
-              commit(emptyWithSchema(schema), m, config,
-                dvOverride = Some(merged))
-            }
-          } finally { matched.unpersist(); () }
-        }
+      nonEmptySnapshot().foreach { s =>
+        val (bk, dirs) = keyedDirs(s,
+          keys.select(table.keyCols.map(keys.col): _*).distinct())
+        if (dirs.nonEmpty)
+          commitDv(s, readDirsWithMeta(dirs, s.version)
+            .join(broadcast(bk), table.keyCols, "left_semi"), config)
       }
     }
 
-  /** Uniform schema of version `v`'s snapshot (invariant: every file a
-    * version references shares it — migrations rewrite all buckets).
-    * `m` must be `v`'s OWN manifest: the schema cache is keyed by the
-    * version whose dirs are read, so threading a mismatched (v, m) pair
-    * would poison the cache across a schema migration (the r13 advice
-    * defect — the old form keyed every lookup by currentVersion() while
-    * reading whatever manifest the caller held). Every caller already
-    * holds the pair from [[currentVm]] or [[readManifest]]. */
-  private def currentSchema(v: Long, m: Map[Int, String]): StructType =
-    schemaAt(v, m.values.toSeq.distinct.head)
+  /** Fold the positions of `hits` (rows read with their metadata
+    * columns) into the snapshot's applicable deletion vector and commit
+    * it as a new version carrying every bucket dir unchanged. No hits ⇒
+    * no commit. */
+  private def commitDv(s: Snapshot, hits: DataFrame, config: IngestConfig): Unit = {
+    val matched = hits.select(col(DvFileCol), col(DvPosCol)).persist()
+    try {
+      if (matched.limit(1).count() > 0) {
+        val merged = dvVersionFor(s.version).map(readDv(_))
+          .map(_.unionByName(matched)).getOrElse(matched).distinct()
+        commit(s, emptyWithSchema(schemaOf(s)), s.manifest, config,
+          dvOverride = Some(merged))
+      }
+    } finally { matched.unpersist(); () }
+  }
 
   private def emptyWithSchema(s: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
 
   /** Bucket ids the (small, deduped-later) batch touches. */
   private def bucketsOf(batch: DataFrame): Seq[Int] =
     batch.select(bucketOf(batch).as("b")).distinct()
       .collect().map(_.getInt(0)).toSeq
+
+  /** `keys` conformed to the snapshot's stored types, and the dirs of
+    * the buckets they hash into. */
+  private def keyedDirs(s: Snapshot, keys: DataFrame): (DataFrame, Seq[String]) = {
+    val bk = conformKeys(keys, schemaOf(s))
+    (bk, bucketsOf(bk).flatMap(s.manifest.get).distinct)
+  }
 
   /** Cast every batch column that exists in the snapshot to its STORED
     * type. Two reasons this must cover ALL columns, not just keys:
@@ -770,64 +743,58 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     * `src/upsert.rs:283-295`), bucket-pruned: only buckets containing
     * batch keys are read and rewritten. */
   def mergeUpsert(batch: DataFrame, config: IngestConfig): Unit =
-    withCommitLock { withCached(batch) { b =>
-      // A hard delete can legitimately empty the table: its manifest has
-      // zero entries and no schema to derive, so the next upsert
-      // re-initializes exactly like a fresh table instead of crashing on
-      // a zero-path schema read.
-      currentVm().filter(_._2.nonEmpty) match {
-        case None =>
-          commit(Dedup.latestWins(b, table.keyCols, table.versionCol,
-            table.tieBreakCols), Map.empty, config)
-        case Some((v, m)) =>
-          val schema = currentSchema(v, m)
-          val bk = conformKeys(b, schema)
-          val affected = bucketsOf(bk)
-          val sliceDirs = affected.flatMap(m.get).distinct
-          // DV-aware slice: a rewritten bucket must not resurrect rows a
-          // vectored delete already marked
-          val slice =
-            if (sliceDirs.nonEmpty) readDirsDv(sliceDirs, v)
-            else emptyWithSchema(schema)
-          val merged = Merge.upsertBroadcast(slice, bk,
-            table.keyCols, table.versionCol, table.tieBreakCols,
-            defaults = Map(table.softDeleteCol -> lit(true)))
-          commit(merged, m -- affected, config)
-      }
-    }}
+    rewriteBuckets(batch, config, init = Some(b =>
+      Dedup.latestWins(b, table.keyCols, table.versionCol, table.tieBreakCols)))(
+      (_, bk, _) => bucketsOf(bk))(
+      Merge.upsertBroadcast(_, _, table.keyCols, table.versionCol,
+        table.tieBreakCols, defaults = Map(table.softDeleteCol -> lit(true))))
 
   /** Soft delete (sets `table.softDeleteCol` false). First use migrates
     * the flag column in by rewriting every bucket once, so the snapshot
     * schema stays uniform. */
   def mergeSoftDelete(batch: DataFrame, config: IngestConfig): Unit =
-    withCommitLock { withCached(batch) { b =>
-      currentVm().filter(_._2.nonEmpty).foreach { case (v, m) =>
-        val schema = currentSchema(v, m)
-        val bk = conformKeys(b, schema)
-        val migrating = !schema.fieldNames.contains(table.softDeleteCol)
-        val affected = if (migrating) m.keys.toSeq else bucketsOf(bk)
-        val sliceDirs = affected.flatMap(m.get).distinct
-        if (sliceDirs.nonEmpty) {
-          val merged = Merge.softDelete(readDirsDv(sliceDirs, v), bk,
-            table.keyCols,
-            table.versionCol, table.tieBreakCols, table.softDeleteCol)
-          commit(merged, m -- affected, config)
-        }
-      }
-    }}
+    rewriteBuckets(batch, config)((s, bk, schema) =>
+      if (schema.fieldNames.contains(table.softDeleteCol)) bucketsOf(bk)
+      else s.manifest.keys.toSeq)(
+      Merge.softDelete(_, _, table.keyCols, table.versionCol,
+        table.tieBreakCols, table.softDeleteCol))
 
   /** Hard delete (drops the rows). */
   def mergeHardDelete(batch: DataFrame, config: IngestConfig): Unit =
+    rewriteBuckets(batch, config)((_, bk, _) => bucketsOf(bk))(
+      Merge.hardDelete(_, _, table.keyCols, table.versionCol, table.tieBreakCols))
+
+  /** The bucket rewrite every keyed merge shares: take the lease, cache
+    * the batch, resolve the snapshot, conform the batch to the stored
+    * schema, pick the `affected` buckets, read their slice through the
+    * deletion vector (a rewritten bucket must not resurrect rows a
+    * vectored delete already marked), `merge` (slice, batch), commit the
+    * result with every other bucket carried over.
+    *
+    * `init` is set for merges that create rows (upsert): it builds the
+    * first commit of an empty table — a hard delete can legitimately
+    * empty it, and the next upsert re-initializes exactly like a fresh
+    * table instead of crashing on a zero-path schema read — and a batch
+    * whose buckets hold no rows yet still merges against an empty slice.
+    * Deletes leave it unset: on an empty table or slice they are no-ops
+    * and publish nothing. */
+  private def rewriteBuckets(batch: DataFrame, config: IngestConfig,
+      init: Option[DataFrame => DataFrame] = None)(
+      affected: (Snapshot, DataFrame, StructType) => Seq[Int])(
+      merge: (DataFrame, DataFrame) => DataFrame): Unit =
     withCommitLock { withCached(batch) { b =>
-      currentVm().filter(_._2.nonEmpty).foreach { case (v, m) =>
-        val bk = conformKeys(b, currentSchema(v, m))
-        val affected = bucketsOf(bk)
-        val sliceDirs = affected.flatMap(m.get).distinct
-        if (sliceDirs.nonEmpty) {
-          val merged = Merge.hardDelete(readDirsDv(sliceDirs, v), bk,
-            table.keyCols,
-            table.versionCol, table.tieBreakCols)
-          commit(merged, m -- affected, config)
+      val s = snapshot().getOrElse(Snapshot(0L, Map.empty))
+      if (s.manifest.isEmpty) init.foreach(f => commit(s, f(b), Map.empty, config))
+      else {
+        val schema = schemaOf(s)
+        val bk = conformKeys(b, schema)
+        val hit = affected(s, bk, schema)
+        val sliceDirs = hit.flatMap(s.manifest.get).distinct
+        if (sliceDirs.nonEmpty || init.isDefined) {
+          val slice =
+            if (sliceDirs.nonEmpty) readDirsDv(sliceDirs, s.version)
+            else emptyWithSchema(schema)
+          commit(s, merge(slice, bk), s.manifest -- hit, config)
         }
       }
     }}
@@ -861,11 +828,9 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     * exclusion and the commit pays nothing extra. Elsewhere the lease
     * writes a unique token and reads it back — the overwrite race
     * resolves last-writer-wins, the loser sees a foreign token and
-    * aborts, so at most one writer proceeds. `leaseSettleMillis`
-    * (default 0: single-writer deployments should not tax every
-    * micro-batch) optionally pauses before the read-back so a racing
-    * overwrite lands first on stores with delayed visibility. This
-    * shrinks the race window rather than closing it — for genuinely
+    * aborts, so at most one writer proceeds. This narrows the race
+    * rather than closing it (two racers can each read back their own
+    * token before the other's overwrite lands) — for genuinely
     * concurrent multi-writer deployments on object stores, front the
     * target with external coordination (the reference gets this from
     * Postgres transactions; see src/upsert.rs:209-269). */
@@ -886,7 +851,7 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     try { try { out.write(token); out.hsync() } finally out.close() }
     catch { case e: Throwable => fs.delete(lockPath, false); throw e }
     if (!atomicCreateExclusive) {
-      if (leaseSettleMillis == 0) warnSettleDisabledOnce()
+      warnNonAtomicOnce()
       onLeaseSettle()
       val readBack = {
         val in = fs.open(lockPath)
@@ -914,29 +879,25 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
   private def atomicCreateExclusive: Boolean =
     Set("hdfs", "viewfs", "webhdfs", "swebhdfs").contains(fs.getUri.getScheme)
 
-  /** One warning per target instance: with settle=0 on a non-atomic store,
-    * two racers that both pass create() will each likely read back their own
-    * token before the other's overwrite lands — the verification is then
-    * mostly ineffective, fine for the supported single-writer contract but
-    * worth a trace if a second writer does exist
-    * (`IngestConfig.leaseSettleMillis` is the knob). */
-  private lazy val warnSettleDisabledOnce: () => Unit = {
+  /** One warning per target instance: on a non-atomic store, two racers
+    * that both pass create() will each likely read back their own token
+    * before the other's overwrite lands — fine for the supported
+    * single-writer contract, worth a trace if a second writer does exist. */
+  private lazy val warnNonAtomicOnce: () => Unit = {
     org.slf4j.LoggerFactory.getLogger(classOf[ParquetTarget]).warn(
-      "target {}: filesystem scheme '{}' has non-atomic create-exclusive and " +
-        "leaseSettleMillis=0 — the writer-lease token verification cannot " +
-        "catch a concurrent writer reliably; this is fine for single-writer " +
-        "deployments, otherwise set IngestConfig.leaseSettleMillis (~50ms)",
+      "target {}: filesystem scheme '{}' has non-atomic create-exclusive — " +
+        "the writer-lease token verification cannot catch a concurrent " +
+        "writer reliably; this is fine for single-writer deployments, " +
+        "otherwise front the target with external coordination",
       table.name, fs.getUri.getScheme)
     () => ()
   }
 
   /** Test seam: runs at the settle point of the non-atomic lease path —
-    * after the token write closes, before the read-back. Default is the
-    * `leaseSettleMillis` pause; specs replace it to sequence a racing
-    * overwrite deterministically instead of timing a racer thread against
-    * a wall-clock sleep. */
-  private[graft] var onLeaseSettle: () => Unit =
-    () => if (leaseSettleMillis > 0) Thread.sleep(leaseSettleMillis)
+    * after the token write closes, before the read-back. A no-op by
+    * default; specs replace it to sequence a racing overwrite
+    * deterministically instead of timing a racer thread. */
+  private[graft] var onLeaseSettle: () => Unit = () => ()
 
   /** Remove a stale writer lease left by a crash (see [[withCommitLock]]). */
   def breakLock(): Unit = { fs.delete(lockPath, false); () }
@@ -951,35 +912,31 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     * survive the transform. No-op on an empty/absent target. */
   def migrate(config: IngestConfig)(transform: DataFrame => DataFrame): Unit =
     withCommitLock {
-      currentVm().filter(_._2.nonEmpty).foreach { case (v, m) =>
-        val out = transform(readDirsDv(m.values.toSeq.distinct, v))
+      nonEmptySnapshot().foreach { s =>
+        val out = transform(readDirsDv(s.dirs, s.version))
         val missing =
           (table.keyCols ++ table.orderingCols).diff(out.columns.toSeq)
         require(missing.isEmpty,
           s"migration dropped merge-contract columns: ${missing.mkString(", ")}")
-        commit(out, Map.empty, config)
+        commit(s, out, Map.empty, config)
       }
     }
 
-  /** Write `df`'s buckets under the next delta dir, publish a manifest of
-    * (carried-over ++ rewritten) buckets, repoint `_LATEST`, GC. The data
-    * fully materializes before any existing state is referenced or
-    * touched (we may be reading dirs we're superseding). Callers hold the
-    * `_LOCK` lease (every public mutator wraps itself in withCommitLock). */
+  /** Write `df`'s buckets under the delta dir of the version after
+    * `base`, then publish (carried-over ++ rewritten) buckets as that
+    * version. The data fully materializes before any existing state is
+    * referenced or touched (we may be reading dirs we're superseding).
+    * Callers hold the `_LOCK` lease (every public mutator wraps itself in
+    * withCommitLock) and pass the snapshot they resolved under it. */
   private def commit(
-      df: DataFrame, carryOver: Map[Int, String], config: IngestConfig,
+      base: Snapshot, df: DataFrame, carryOver: Map[Int, String],
+      config: IngestConfig,
       onePerBucket: Boolean = false,
       sortWithin: Seq[Column] = Nil,
       dvOverride: Option[DataFrame] = None): Unit = {
-    val cur = currentVersion().getOrElse(0L)
-    // Purge orphan deletion-vector sidecars from a crashed deleteVectored
-    // (sidecar written, manifest never published): left in place they
-    // would silently activate for THIS commit's version.
-    if (fs.exists(root)) fs.listStatus(root).toSeq.map(_.getPath).foreach {
-      p => if (versionOf('x', p.getName) > cur) fs.delete(p, true)
-    }
-    val next = cur + 1L
-    val delta = deltaName(next)
+    purgeOrphanDvs(base.version)
+    val next = base.version + 1L
+    val delta = nameOf('d', next)
     val deltaPath = new Path(root, delta)
     val bucketed = df.withColumn(BucketCol, bucketOf(df))
     val placed =
@@ -1004,39 +961,31 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     // Zone-map sidecar (per-bucket min/max of the version column, for
     // data-skipping range reads): recompute bounds for the buckets this
     // commit wrote by scanning ONLY the fresh delta projected to the
-    // version column (footer-cheap), carry the previous sidecar's bounds
-    // for carried-over buckets (their files did not change). Written
-    // before the pointer repoint — an orphan sidecar from a crashed
-    // commit is unreachable, and a MISSING sidecar only disables
+    // version column (footer-cheap; the explicit schema skips the
+    // footer-inference job, partition discovery still supplies the
+    // bucket), carry the base version's bounds for carried-over buckets
+    // (their files did not change). A MISSING sidecar only disables
     // pruning, never correctness. Non-integral version columns get no
     // sidecar (no pruning).
-    val zonable = bucketed.schema.find(_.name == table.versionCol)
-      .map(_.dataType)
-      .exists {
+    val zones = bucketed.schema.find(_.name == table.versionCol)
+      .filter(_.dataType match {
         case LongType | IntegerType | ShortType | ByteType => true
         case _ => false
+      })
+      .map { versionField =>
+        val writtenZones: Map[Int, (Long, Long)] =
+          if (written.isEmpty) Map.empty
+          else spark.read.schema(StructType(Seq(versionField)))
+            .parquet(deltaPath.toString)
+            .groupBy(col(BucketCol).cast("int").as("__b"))
+            .agg(min(col(table.versionCol).cast("long")).as("__mn"),
+              max(col(table.versionCol).cast("long")).as("__mx"))
+            .collect()
+            .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2)))
+            .toMap
+        readZones(base.version).getOrElse(Map.empty)
+          .filter { case (b, _) => carryOver.contains(b) } ++ writtenZones
       }
-    if (zonable) {
-      val writtenZones: Map[Int, (Long, Long)] =
-        if (written.isEmpty) Map.empty
-        else spark.read.parquet(deltaPath.toString)
-          .groupBy(col(BucketCol).cast("int").as("__b"))
-          .agg(min(col(table.versionCol).cast("long")).as("__mn"),
-            max(col(table.versionCol).cast("long")).as("__mx"))
-          .collect()
-          .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2)))
-          .toMap
-      val carriedZones = currentVersion()
-        .map(readZones).getOrElse(Map.empty)
-        .filter { case (b, _) => carryOver.contains(b) }
-      val zones = carriedZones ++ writtenZones
-      val zPath = new Path(root, zoneName(next))
-      val zOut = fs.create(zPath, true)
-      try zOut.write(zones.toSeq.sortBy(_._1)
-        .map { case (b, (mn, mx)) => s"$b\t$mn\t$mx" }
-        .mkString("\n").getBytes(StandardCharsets.UTF_8))
-      finally zOut.close()
-    }
 
     // Deletion-vector sidecar (only a vectored delete writes one; normal
     // commits leave the previous sidecar authoritative via the
@@ -1052,40 +1001,40 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
             .cast("int"))
         .repartition(col(DvBucketCol))
         .write.partitionBy(DvBucketCol).mode("overwrite")
-        .parquet(new Path(root, dvName(next)).toString)
+        .parquet(pathOf('x', next).toString)
     }
+    publishVersion(next, entries, zones)
+  }
 
-    // Publish the manifest, then atomically repoint. Crash between the
-    // two: the intact pointer still names version next-1, the replayed
-    // micro-batch re-merges idempotently onto it, deletes this orphan
-    // manifest below and republishes version next. Pointer lost too:
-    // recovery scans to the highest intact manifest — this one. Rename
-    // results are checked: on HDFS a rename onto an existing destination
-    // returns false instead of overwriting (a replayed commit hits this),
-    // so the stale destination is deleted first and a false return is an
-    // error, never silence.
-    val mPath = new Path(root, manifestName(next))
-    val mTmp = new Path(root, manifestName(next) + ".tmp")
-    val out = fs.create(mTmp, true)
-    try out.write((s"#buckets=${table.buckets}" +:
-      entries.toSeq.sortBy(_._1).map { case (b, d) => s"$b\t$d" })
-      .mkString("\n").getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(mPath)) fs.delete(mPath, false)
-    if (!fs.rename(mTmp, mPath))
-      throw new IllegalStateException(s"failed to publish manifest $mPath")
-    val p = fs.create(pointerTmp, true)
-    try p.write(manifestName(next).getBytes(StandardCharsets.UTF_8))
-    finally p.close()
-    if (fs.exists(pointer)) fs.delete(pointer, false)
-    if (!fs.rename(pointerTmp, pointer))
-      throw new IllegalStateException(s"failed to repoint $pointer")
-
-    // GC: manifests older than the retention window, and bucket dirs no
-    // RETAINED manifest references (readers resolved against any retained
-    // version keep their files; retainVersions = 1 keeps only `next`).
+  /** Make version `next` current: zone sidecar (when given), manifest,
+    * `_LATEST` repoint, then GC. The only writer of manifests and of
+    * `_LATEST`. Sidecars land before the manifest, so an orphan from a
+    * crashed publish is unreachable. Crash between manifest and repoint:
+    * the intact pointer still names the previous version, the replayed
+    * micro-batch re-merges idempotently onto it and republishes `next`
+    * over this orphan; pointer lost too: recovery scans to the highest
+    * intact manifest — this one. GC then drops manifests older than the
+    * retention window and bucket dirs no RETAINED manifest references
+    * (readers resolved against any retained version keep their files;
+    * retainVersions = 1 keeps only `next`). */
+  private def publishVersion(next: Long, entries: Map[Int, String],
+      zones: Option[Map[Int, (Long, Long)]]): Unit = {
+    zones.foreach(z => publishFile(pathOf('z', next), z.toSeq.sortBy(_._1)
+      .map { case (b, (mn, mx)) => s"$b\t$mn\t$mx" }.mkString("\n")))
+    publishFile(pathOf('m', next), (s"#buckets=${table.buckets}" +:
+      entries.toSeq.sortBy(_._1).map { case (b, d) => s"$b\t$d" }).mkString("\n"))
+    publishFile(pointer, nameOf('m', next))
     gcRetained(next, entries, table.retainVersions)
   }
+
+  /** Delete deletion-vector sidecars above committed version `cur` —
+    * orphans of a crashed vectored delete (sidecar written, manifest
+    * never published) that would otherwise silently activate for the
+    * next version. */
+  private def purgeOrphanDvs(cur: Long): Unit =
+    listVersioned().foreach { case (k, x, p) =>
+      if (k == 'x' && x > cur) fs.delete(p, true)
+    }
 
   /** Explicit snapshot expiry — the on-demand VACUUM twin of the
     * per-commit GC (Iceberg `expire_snapshots` / Delta `VACUUM`):
@@ -1102,7 +1051,7 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
   def expireSnapshots(keep: Int): (Long, Long) = {
     require(keep >= 1, s"keep must be >= 1, got $keep")
     val before = versions().size.toLong
-    currentVm().foreach { case (v, entries) => gcRetained(v, entries, keep) }
+    snapshot().foreach(s => gcRetained(s.version, s.manifest, keep))
     (before, versions().size.toLong)
   }
 
@@ -1111,68 +1060,39 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     * or deleted — the bad commits stay in history for audit until GC
     * ages them out — and the new current state is bit-identical to
     * `readVersion(v)`. Sidecars are re-pinned alongside the manifest:
-    * the zone map is copied from z_v (same entries ⇒ same bounds; a
-    * GC'd z_v just disables pruning, never correctness), and the
+    * the zone map is republished from z_v (same entries ⇒ same bounds;
+    * a GC'd z_v just disables pruning, never correctness), and the
     * deletion-vector state applicable AT v is copied to the new
     * version — or, when v predates every vector, an explicit EMPTY
     * sidecar is published so vectors from the rolled-back-over commits
     * cannot leak into the restored state (the at-or-before resolution
     * rule would otherwise pick them up). O(metadata) cost: one manifest
-    * copy + sidecar copies, zero data IO — the property that makes
-    * rollback instant at 100 TB. */
+    * + sidecar copies, zero data IO — the property that makes rollback
+    * instant at 100 TB. */
   def rollbackTo(v: Long): Unit = withCommitLock {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val cur = currentVersion().getOrElse(
-      throw new IllegalStateException("rollback on an empty target"))
+    val cur = snapshot().getOrElse(
+      throw new IllegalStateException("rollback on an empty target")).version
     require(v >= 1 && v <= cur, s"version $v out of range 1..$cur")
-    require(readManifest(v).isDefined,
+    val restored = readManifest(v)
+    require(restored.isDefined,
       s"version $v is expired or references GC'd files — cannot roll back")
-    // purge orphan DV sidecars from crashed commits (commit() posture)
-    fs.listStatus(root).toSeq.map(_.getPath).foreach { p =>
-      if (versionOf('x', p.getName) > cur) fs.delete(p, true)
-    }
+    purgeOrphanDvs(cur)
     val next = cur + 1L
-    val zSrc = new Path(root, zoneName(v))
-    if (fs.exists(zSrc))
-      org.apache.hadoop.fs.FileUtil.copy(
-        fs, zSrc, fs, new Path(root, zoneName(next)), false, conf)
     dvVersionFor(v) match {
       case Some(x) =>
-        org.apache.hadoop.fs.FileUtil.copy(
-          fs, new Path(root, dvName(x)), fs, new Path(root, dvName(next)),
-          false, conf)
+        FileUtil.copy(fs, pathOf('x', x), fs, pathOf('x', next), false,
+          spark.sparkContext.hadoopConfiguration)
+      case None if versionsOf('x').nonEmpty =>
+        // one empty parquet part WITH a footer (repartition(1) forces
+        // a task) so the at-or-before DV resolution lands here and
+        // reads an empty vector, masking the rolled-back-over ones
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), dvSchema)
+          .repartition(1)
+          .write.mode("overwrite")
+          .parquet(pathOf('x', next).toString)
       case None =>
-        val laterDvExists = fs.listStatus(root).exists(s =>
-          versionOf('x', s.getPath.getName) >= 0)
-        if (laterDvExists) {
-          // one empty parquet part WITH a footer (repartition(1) forces
-          // a task) so the at-or-before DV resolution lands here and
-          // reads an empty vector, masking the rolled-back-over ones
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(DvFileCol,
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField(DvPosCol,
-              org.apache.spark.sql.types.LongType)))
-          spark.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              schema)
-            .repartition(1)
-            .write.mode("overwrite")
-            .parquet(new Path(root, dvName(next)).toString)
-        }
     }
-    // republish v's manifest verbatim as m_next, then repoint
-    org.apache.hadoop.fs.FileUtil.copy(
-      fs, new Path(root, manifestName(v)), fs,
-      new Path(root, manifestName(next)), false, conf)
-    val p = fs.create(pointerTmp, true)
-    try p.write(manifestName(next).getBytes(StandardCharsets.UTF_8))
-    finally p.close()
-    if (fs.exists(pointer)) fs.delete(pointer, false)
-    if (!fs.rename(pointerTmp, pointer))
-      throw new IllegalStateException(s"failed to repoint $pointer")
-    gcRetained(next, readManifest(next).getOrElse(Map.empty),
-      table.retainVersions)
+    publishVersion(next, restored.get, readZones(v))
   }
 
   /** Shared GC kernel: retain `retain` versions ending at `newest`
@@ -1185,23 +1105,18 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     val oldestKept = newest - retain + 1
     val referenced = newestEntries.values.toSet ++
       (oldestKept until newest).flatMap(readManifest(_)).flatMap(_.values)
+    val listed = listVersioned()
     // Deletion-vector sidecars outlive the manifest retention window: a
     // sidecar below the window is still THE applicable vector for every
     // retained version until a newer one supersedes it, so only sidecars
     // strictly older than the newest at-or-below-window one are dead.
-    val dvKeepFloor = fs.listStatus(root).toSeq
-      .map(s => versionOf('x', s.getPath.getName))
-      .filter(x => x >= 0 && x <= oldestKept)
+    val dvKeepFloor = listed.collect { case ('x', x, _) if x <= oldestKept => x }
       .maxOption.getOrElse(Long.MinValue)
-    fs.listStatus(root).toSeq.map(_.getPath).foreach { path =>
-      val n = path.getName
-      if (versionOf('m', n) >= 0 && versionOf('m', n) < oldestKept)
-        fs.delete(path, false)
-      else if (versionOf('z', n) >= 0 && versionOf('z', n) < oldestKept)
-        fs.delete(path, false)
-      else if (versionOf('x', n) >= 0 && versionOf('x', n) < dvKeepFloor)
-        fs.delete(path, true)
-      else if (versionOf('d', n) >= 0) {
+    listed.foreach {
+      case ('m' | 'z', v, path) if v < oldestKept => fs.delete(path, false)
+      case ('x', x, path) if x < dvKeepFloor => fs.delete(path, true)
+      case ('d', _, path) =>
+        val n = path.getName
         fs.listStatus(path).toSeq.map(_.getPath)
           .filter(_.getName.startsWith(s"$BucketCol="))
           .foreach { b =>
@@ -1209,7 +1124,15 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
           }
         if (!fs.listStatus(path).exists(_.getPath.getName.startsWith(s"$BucketCol=")))
           fs.delete(path, true)
-      }
+      case _ =>
     }
+  }
+}
+
+object ParquetTarget {
+  /** One committed version and its manifest (bucket -> dir). Version 0
+    * with no entries stands for "nothing committed yet". */
+  private final case class Snapshot(version: Long, manifest: Map[Int, String]) {
+    def dirs: Seq[String] = manifest.values.toSeq.distinct
   }
 }

@@ -139,7 +139,7 @@ final class AggUpsertStream(
 
   private def runWith(
       aggregated: DataFrame, trigger: Option[Trigger]): StreamingQuery = {
-    val sink = new ParquetTarget(spark, target, config.leaseSettleMillis)
+    val sink = new ParquetTarget(spark, target)
     graft.engine.Streams.start(aggregated, config, target.path + "_agg_ckpt",
       trigger, outputMode = Some("update")) {
       (batch: Dataset[Row], _: Long) => sink.mergeUpsert(batch, config)

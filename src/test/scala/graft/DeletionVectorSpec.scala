@@ -102,6 +102,17 @@ class DeletionVectorSpec extends SparkSpec {
     assert(changes.count() == deleted.size, "no spurious non-delete rows")
   }
 
+  test("CDC across a rollback past a vectored delete emits the restored rows") {
+    val (sink, _) = mk()
+    seed(sink) // version 1
+    sink.deleteVectoredKeys(Seq(3L, 17L).toDF("pkey"), cfg) // version 2
+    sink.rollbackTo(1L) // version 3: no bucket dir changes, only the vector
+    assert(sink.read().get.count() == 40L)
+    val changes = sink.readChanges(2L, 3L).get
+      .select("pkey", "_change_type").as[(Long, String)].collect().toSet
+    assert(changes == Set((3L, "insert"), (17L, "insert")))
+  }
+
   test("compaction materializes the vector; sidecar survives retention until superseded") {
     val (sink, t) = mk(retain = 2)
     seed(sink) // v1

@@ -1,0 +1,221 @@
+#!/usr/bin/env python3
+"""Paired parent/change runs of the ingest benchmark, with a verdict per metric.
+
+Usage:
+    python3 tools/bench_pairs.py --base-rev REV --base-dir DIR [--pairs N]
+        [--seed0 S] [--workload NAME ...]
+    python3 tools/bench_pairs.py --selftest
+
+DIR is a checkout of REV (a `git worktree` or clone). The change side is the
+repository this script lives in. For each gated workload in BENCHMARK.json
+the script runs N pairs; pair i uses seed S + i on both sides, the side that
+runs first alternates, and every run is
+
+    python3 ingestbench/run.py --workload W --seed S+i --seconds T --trace 0
+
+with T = `run_seconds` from BENCHMARK.json, in that side's directory. Both
+sides build once (`run.py --selftest`) before the first pair, so no build
+lands inside a timed run. The script reads BENCHMARK.json and ingestbench/
+and never writes to them (run.py keeps its own build and scratch dirs).
+
+For each workload and end-to-end metric it prints each side's median and
+quartiles, the change's win fraction over the pairs (ties count for
+neither side), the attempted/failed operation counts of each side, and a
+verdict:
+
+  improved     the change wins at least 9/10 of the pairs and its median is
+               better than the parent's by more than the parent's
+               interquartile range
+  unresolved   the parent's spread (IQR / median) exceeds the metric's bound,
+               unless every change run is better than every parent run
+  regressed    the change's median is worse than the parent's by more than
+               the bound (relative to the parent's median)
+  within bound otherwise
+
+A run that exits non-zero or prints no result line counts as failed; its
+metrics are left out and its attempted/failed counts are unknown.
+"""
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def quartiles(xs):
+    """(q1, median, q3) with the inclusive method; one sample gives (x, x, x)."""
+    xs = sorted(xs)
+    if len(xs) == 1:
+        return xs[0], xs[0], xs[0]
+    q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, med, q3
+
+
+def better(a, b, direction):
+    """Whether value a is strictly better than b."""
+    return a < b if direction == "lower" else a > b
+
+
+def verdict(parent, change, pairs, direction, bound):
+    """Verdict for one metric.
+
+    parent, change: the runs' values; pairs: (parent, change) values of the
+    pairs where both runs produced a result; bound: relative regression bound.
+    """
+    if not parent or not change:
+        return "unresolved", 0.0
+    p1, pm, p3 = quartiles(parent)
+    _, cm, _ = quartiles(change)
+    wins = sum(1 for p, c in pairs if better(c, p, direction))
+    win_frac = wins / len(pairs) if pairs else 0.0
+    if win_frac >= 0.9 and better(cm, pm, direction) and abs(cm - pm) > p3 - p1:
+        return "improved", win_frac
+    spread = (p3 - p1) / abs(pm) if pm else float("inf")
+    all_better = all(better(c, p, direction) for c in change for p in parent)
+    if spread > bound and not all_better:
+        return "unresolved", win_frac
+    worse = (cm - pm) if direction == "lower" else (pm - cm)
+    if pm and worse / abs(pm) > bound:
+        return "regressed", win_frac
+    return "within bound", win_frac
+
+
+def run_one(side_dir, workload, seed, seconds):
+    cmd = ["python3", "ingestbench/run.py", "--workload", workload,
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+    r = subprocess.run(cmd, cwd=side_dir, stdout=subprocess.PIPE,
+                       stderr=subprocess.DEVNULL)
+    line = next((l for l in r.stdout.decode().splitlines()
+                 if l.startswith("{")), None)
+    if r.returncode != 0 or line is None:
+        return None
+    res = json.loads(line)
+    return res if res.get("correct") else None
+
+
+def check_base(base_rev, base_dir):
+    head = subprocess.run(["git", "-C", base_dir, "rev-parse", "HEAD"],
+                          stdout=subprocess.PIPE, stderr=subprocess.DEVNULL)
+    want = subprocess.run(["git", "-C", ROOT, "rev-parse", base_rev],
+                          stdout=subprocess.PIPE, stderr=subprocess.DEVNULL)
+    if want.returncode != 0:
+        sys.exit(f"bench_pairs: unknown revision {base_rev}")
+    if head.returncode != 0 or head.stdout.strip() != want.stdout.strip():
+        sys.exit(f"bench_pairs: {base_dir} is not a checkout of {base_rev}")
+
+
+def main_pairs(a):
+    check_base(a.base_rev, a.base_dir)
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    seconds = bench["run_seconds"]
+    workloads = a.workload or [w["name"] for w in bench["workloads"]]
+    metrics = bench["end_to_end"]
+    sides = {"parent": os.path.abspath(a.base_dir), "change": ROOT}
+    for name, d in sides.items():
+        r = subprocess.run(["python3", "ingestbench/run.py", "--selftest"],
+                           cwd=d, stdout=subprocess.DEVNULL)
+        if r.returncode != 0:
+            sys.exit(f"bench_pairs: {name} build or selftest failed")
+    for w in workloads:
+        runs = {"parent": [], "change": []}
+        for i in range(a.pairs):
+            seed = a.seed0 + i
+            order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
+            for side in order:
+                res = run_one(sides[side], w, seed, seconds)
+                runs[side].append(res)
+                state = "failed" if res is None else "ok"
+                print(f"[bench_pairs] {w} pair {i + 1}/{a.pairs} seed {seed} "
+                      f"{side}: {state}", file=sys.stderr, flush=True)
+        print(f"== {w}: {a.pairs} pairs, {seconds} s runs, seeds "
+              f"{a.seed0}..{a.seed0 + a.pairs - 1}")
+        for side in ("parent", "change"):
+            ok = [r for r in runs[side] if r is not None]
+            print(f"  {side}: runs {len(runs[side])} (failed {len(runs[side]) - len(ok)}), "
+                  f"operations attempted {sum(r['attempted'] for r in ok)} "
+                  f"failed {sum(r['failed'] for r in ok)}")
+        print(f"  {'metric':<18} {'parent q1/med/q3':>28} {'change q1/med/q3':>28} "
+              f"{'win':>5}  verdict")
+        for m in metrics:
+            n, bound, direction = m["name"], m["bound"], m["better"]
+
+            def val(r):
+                return r["metrics"][n]["value"]
+            pv = [val(r) for r in runs["parent"] if r is not None]
+            cv = [val(r) for r in runs["change"] if r is not None]
+            pairs = [(val(p), val(c)) for p, c in zip(runs["parent"], runs["change"])
+                     if p is not None and c is not None]
+            v, win = verdict(pv, cv, pairs, direction, bound)
+
+            def q(xs):
+                return "/".join(f"{x:.4g}" for x in quartiles(xs)) if xs else "-"
+            print(f"  {n:<18} {q(pv):>28} {q(cv):>28} {win:>5.2f}  {v}")
+    return 0
+
+
+def selftest():
+    cases = [
+        # lower is better, tight parent, change clearly faster in every pair
+        (([10, 10.1, 10.2, 9.9, 10.0], [8, 8.1, 8.2, 7.9, 8.0], "lower", 0.25),
+         "improved"),
+        # same distribution: within bound
+        (([10, 10.1, 10.2, 9.9, 10.0], [10.1, 10.0, 9.9, 10.2, 10.0], "lower", 0.25),
+         "within bound"),
+        # change 40 % slower on a tight parent: regressed
+        (([10, 10.1, 10.2, 9.9, 10.0], [14, 14.1, 14.2, 13.9, 14.0], "lower", 0.25),
+         "regressed"),
+        # parent spread 0.5 > bound 0.25 and runs overlap: unresolved
+        (([5, 10, 15, 8, 12], [9, 11, 14, 6, 13], "lower", 0.25), "unresolved"),
+        # wide parent spread but every change run beats every parent run:
+        # not unresolved; the wins and the median gap make it improved
+        (([5, 10, 15, 8, 12], [1, 2, 3, 2, 1], "lower", 0.25), "improved"),
+        # higher is better: 20 % lower throughput on a tight parent stays
+        # within a 0.25 bound, 30 % lower regresses
+        (([100, 101, 99, 100, 100], [80, 81, 79, 80, 80], "higher", 0.25),
+         "within bound"),
+        (([100, 101, 99, 100, 100], [70, 71, 69, 70, 70], "higher", 0.25),
+         "regressed"),
+        # 8 of 10 wins is below 9/10: a better median alone is not a gain
+        (([10] * 10, [9] * 8 + [11] * 2, "lower", 0.25), "within bound"),
+    ]
+    bad = 0
+    for (parent, change, direction, bound), want in cases:
+        got, _ = verdict(parent, change, list(zip(parent, change)), direction, bound)
+        if got != want:
+            bad += 1
+            print(f"FAIL {direction} parent={parent} change={change}: "
+                  f"got {got}, want {want}")
+    ties, win = verdict([1, 2, 3], [1, 2, 3], [(1, 1), (2, 2), (3, 3)], "lower", 0.25)
+    if win != 0.0:
+        bad += 1
+        print(f"FAIL ties must count for neither side: win fraction {win}")
+    if quartiles([1, 2, 3, 4, 5]) != (2, 3, 4):
+        bad += 1
+        print(f"FAIL quartiles {quartiles([1, 2, 3, 4, 5])}")
+    print("selftest ok" if bad == 0 else f"selftest: {bad} failure(s)")
+    return 0 if bad == 0 else 1
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__,
+                                 formatter_class=argparse.RawDescriptionHelpFormatter)
+    ap.add_argument("--base-rev")
+    ap.add_argument("--base-dir")
+    ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--seed0", type=int, default=1)
+    ap.add_argument("--workload", action="append")
+    ap.add_argument("--selftest", action="store_true")
+    a = ap.parse_args()
+    if a.selftest:
+        return selftest()
+    if not a.base_rev or not a.base_dir:
+        ap.error("--base-rev and --base-dir are required")
+    return main_pairs(a)
+
+
+if __name__ == "__main__":
+    sys.exit(main())
