@@ -84,7 +84,10 @@ final case class TargetTable(
   * atomic create-exclusive (see `ParquetTarget.withCommitLock`).
   *
   * @param maxWriterPartitions writer parallelism cap — reference
-  *                            `max_con_count` (DB connection cap)
+  *                            `max_con_count` (DB connection cap): a
+  *                            commit runs at most this many writer tasks,
+  *                            and each bucket it rewrites is written by
+  *                            ONE task, as one file
   * @param maxRecordsPerTrigger source rate limit — reference
   *                            `max_records_per_cycle_batch` +
   *                            `buffer_size` backpressure bound

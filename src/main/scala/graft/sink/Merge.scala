@@ -2,7 +2,9 @@ package graft.sink
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
+import graft.model.TargetTable
 import graft.ops.Dedup
 
 /** Join-based MERGE — the Spark-native replacement for the reference's
@@ -28,7 +30,9 @@ import graft.ops.Dedup
   * restriction. Shuffle volume is O(|batch|), independent of target size.
   * `upsertShuffle` is the classic full-outer merge for batch-sized updates;
   * with the target bucketed/pre-partitioned by key only the updates side
-  * exchanges.
+  * exchanges. These four frame-level merges are the reference semantics;
+  * [[rewrite]] is the bucketed kernel `ParquetTarget` runs, checked
+  * against them in `PropertySpec`.
   */
 object Merge {
 
@@ -47,11 +51,11 @@ object Merge {
     * drop/keep arbitrary rows. Batch columns absent from the target are a
     * schema-contract violation and fail loud. */
   private def conform(
-      target: DataFrame,
+      target: StructType,
       updates: DataFrame,
       defaults: Map[String, Column],
       requiredCols: Seq[String]): DataFrame = {
-    val extra = updates.columns.toSeq.diff(target.columns.toSeq)
+    val extra = updates.columns.toSeq.diff(target.fieldNames.toSeq)
     require(extra.isEmpty,
       s"update batch has columns absent from the target table: " +
         s"${extra.mkString(", ")} — targets never widen implicitly; " +
@@ -61,9 +65,9 @@ object Merge {
       s"update batch is missing merge-contract columns: " +
         s"${missing.mkString(", ")} — key/version/tie-break columns can " +
         s"never be defaulted")
-    val tTypes = target.schema.map(f => f.name -> f.dataType).toMap
+    val tTypes = target.map(f => f.name -> f.dataType).toMap
     val have = updates.columns.toSet
-    target.columns.toSeq.foldLeft(updates) { (df, c) =>
+    target.fieldNames.toSeq.foldLeft(updates) { (df, c) =>
       if (have(c)) df
       else df.withColumn(c,
         defaults.getOrElse(c, lit(null)).cast(tTypes(c)))
@@ -80,7 +84,7 @@ object Merge {
       tieBreakCols: Seq[String] = Nil,
       defaults: Map[String, Column] = Map.empty): DataFrame = {
     val outCols = target.columns.toSeq
-    val conformed = conform(target, updates, defaults,
+    val conformed = conform(target.schema, updates, defaults,
       keyCols ++ (versionCol +: tieBreakCols))
     val u = Dedup.latestWins(conformed.select(outCols.map(conformed.col): _*),
       keyCols, versionCol, tieBreakCols)
@@ -134,7 +138,7 @@ object Merge {
       tieBreakCols: Seq[String] = Nil,
       defaults: Map[String, Column] = Map.empty): DataFrame = {
     val outCols = target.columns.toSeq
-    val conformed = conform(target, updates, defaults,
+    val conformed = conform(target.schema, updates, defaults,
       keyCols ++ (versionCol +: tieBreakCols))
     val u = Dedup.latestWins(conformed.select(outCols.map(conformed.col): _*),
       keyCols, versionCol, tieBreakCols)
@@ -192,6 +196,163 @@ object Merge {
       .where(bD.col("__d_ord").isNull ||
         bD.col("__d_ord") < ordering(target, versionCol, tieBreakCols))
       .select(target.columns.toSeq.map(target.col): _*)
+  }
+
+  /** What a keyed merge does to the stored row of each batch key. */
+  private[graft] sealed trait Change
+  private[graft] object Change {
+    /** Latest wins; the incoming row wins an exact ordering tie. */
+    case object Upsert extends Change
+    /** A tombstone at least as new turns `softDeleteCol` false; first
+      * use adds the column (true) to every stored row. */
+    case object SoftDelete extends Change
+    /** A tombstone at least as new drops the stored row. */
+    case object HardDelete extends Change
+  }
+
+  private[graft] val BucketCol = "__graft_bucket"
+  /** Writer-task key of a placed row ([[place]]); never written. */
+  private[sink] val TaskCol = "__graft_task"
+  private val SideCol = "__graft_side"
+
+  /** Bucket of each row: Murmur3 `hash` over the table's hash columns,
+    * mod the bucket count — one expression for the read and write side. */
+  private[graft] def bucketOf(table: TargetTable, df: DataFrame): Column =
+    pmod(hash(table.hashCols.map(df.col): _*), lit(table.buckets))
+
+  /** Distinct values of int column `c` in ONE job and no shuffle: each
+    * task reduces its partition to a set and the driver unions them, so
+    * the driver receives at most (distinct values × partitions) ints. */
+  private[sink] def distinctInts(df: DataFrame, c: String): Set[Int] =
+    df.select(df.col(c)).rdd.mapPartitions { rows =>
+      val seen = scala.collection.mutable.HashSet.empty[Int]
+      rows.foreach(r => seen += r.getInt(0))
+      seen.iterator
+    }.collect().toSet
+
+  /** Every column of `batch` that `stored` also has, cast to its STORED
+    * type. Murmur3 hashes differ across integer widths, so a batch key of
+    * another width would pick the wrong buckets; and a wider payload
+    * column would put the rewritten buckets on a different parquet type
+    * than the carried-over ones. */
+  private[sink] def castTo(batch: DataFrame, stored: StructType): DataFrame = {
+    val types = stored.map(f => f.name -> f.dataType).toMap
+    batch.select(batch.columns.toSeq.map { c =>
+      types.get(c).filter(_ != batch.schema(c).dataType)
+        .fold(batch.col(c))(t => batch.col(c).cast(t).as(c))
+    }: _*)
+  }
+
+  /** Rows with their bucket column, placed in n = min(`maxWriterPartitions`,
+    * |`buckets`|) tasks so that every bucket lands in exactly ONE task — a
+    * write partitioned by bucket then makes one file per bucket — and the
+    * buckets are dealt evenly: the i-th of `buckets` goes to task i mod n.
+    * Spark hash-partitions on [[TaskCol]], a per-bucket value chosen on the
+    * driver to hash (Murmur3, seed 42, as `HashPartitioning`) to its task;
+    * hashing the bucket id itself sends 6 of 16 buckets to one of 4 tasks.
+    * A row of a bucket outside `buckets` still lands in one task. */
+  private[sink] def place(table: TargetTable, df: DataFrame,
+      maxWriterPartitions: Int, buckets: Set[Int]): DataFrame = {
+    val n = math.max(1, math.min(maxWriterPartitions, buckets.size))
+    val keyOf = (0 until n).map(i => Iterator.from(0).find(v =>
+      Math.floorMod(org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt(v, 42), n) == i).get)
+    val taskKey = buckets.toSeq.sorted.zipWithIndex.map { case (b, i) => b -> keyOf(i % n) }.toMap
+    val b = if (df.columns.contains(BucketCol)) df
+      else df.withColumn(BucketCol, bucketOf(table, df))
+    b.withColumn(TaskCol, try_element_at(typedLit(taskKey), b.col(BucketCol)))
+      .repartition(n, col(TaskCol))
+  }
+
+  /** The buckets a bucketed merge replaces, and their merged rows
+    * (carrying [[BucketCol]], placed one task per bucket). */
+  private[graft] final case class Rewrite(buckets: Set[Int], rows: DataFrame)
+
+  /** The merge kernel of a bucket-organized target — the one place that
+    * decides which buckets a merge touches.
+    *
+    *  1. `batch` (cached by the caller) is conformed to the stored schema
+    *     ([[conform]]: defaults, fail-loud column checks; stored types via
+    *     [[castTo]]) and its bucket ids are collected — job 1, which also
+    *     fills the cache ([[distinctInts]]: per-partition sets, no shuffle,
+    *     at most buckets × partitions ints on the driver, so no driver-size
+    *     limit applies and no setting bounds it). An empty batch stops
+    *     here: None, nothing to publish.
+    *  2. Only those buckets are read (`readBuckets`, through the deletion
+    *     vector), unioned with the batch tagged by side, and placed one
+    *     task per bucket ([[place]]). Each key folds in ONE aggregate
+    *     grouped by (bucket, keys): the stored row (at most one per key)
+    *     and the newest batch row. The placement already satisfies the
+    *     aggregate's distribution, so the merge is one shuffle of the
+    *     touched slice — no broadcast, no second exchange — and the write
+    *     runs in the aggregate's tasks.
+    *
+    * Per key: an upsert keeps the newest batch row unless the stored row
+    * is strictly newer (the incoming row wins exact ties; duplicate batch
+    * rows dedupe in the same pass); a soft or hard delete keeps the stored
+    * row, flagged or dropped when the newest tombstone is at least as new.
+    *
+    * `stored` is the committed schema (None: nothing stored yet — only an
+    * upsert then writes, on the batch's own schema) and `storedBuckets`
+    * the buckets holding rows. The first soft delete on a table without
+    * `softDeleteCol` rewrites every stored bucket with the flag added, so
+    * a snapshot keeps one schema. None when nothing changes. */
+  private[graft] def rewrite(table: TargetTable, change: Change, batch: DataFrame,
+      stored: Option[StructType], storedBuckets: Set[Int],
+      readBuckets: Seq[Int] => DataFrame, maxWriterPartitions: Int): Option[Rewrite] = {
+    val flag = table.softDeleteCol
+    val contract = table.keyCols ++ table.orderingCols
+    val migrate = change == Change.SoftDelete &&
+      stored.exists(!_.fieldNames.contains(flag))
+    val schema = stored.fold(batch.schema) { s =>
+      if (migrate) s.add(flag, org.apache.spark.sql.types.BooleanType) else s
+    }
+    val conformed = change match {
+      case Change.Upsert => conform(schema, batch, Map(flag -> lit(true)), contract)
+      case _ => conform(schema,
+        batch.select(contract.filter(batch.columns.contains).map(batch.col): _*),
+        Map.empty, contract)
+    }
+    val cols = schema.fieldNames.toSeq
+    val typed = castTo(conformed, schema)
+    val incoming = typed.select(cols.map(typed.col) :+ bucketOf(table, typed).as(BucketCol): _*)
+    // a delete on a table with nothing stored changes nothing: no job
+    val touched =
+      if (stored.isEmpty && change != Change.Upsert) Set.empty[Int]
+      else distinctInts(incoming, BucketCol)
+    val hit = if (migrate) storedBuckets ++ touched else touched
+    val sliceBuckets = if (stored.isEmpty) Set.empty[Int] else hit.intersect(storedBuckets)
+    if (touched.isEmpty || (sliceBuckets.isEmpty && change != Change.Upsert)) None
+    else {
+      val slice = if (sliceBuckets.isEmpty) None else Some {
+        val s = readBuckets(sliceBuckets.toSeq.sorted)
+        val f = if (migrate) s.withColumn(flag, lit(true)) else s
+        f.select(cols.map(f.col) :+ bucketOf(table, f).as(BucketCol) :+ lit(0).as(SideCol): _*)
+      }
+      val sides = slice.toSeq :+ incoming.withColumn(SideCol, lit(1))
+      val placed = place(table, sides.reduce(_ unionByName _), maxWriterPartitions, hit)
+      val row = struct(cols.map(placed.col): _*)
+      val ord = struct(table.orderingCols.map(c => placed.col(c).as(c)): _*)
+      val folded = placed.groupBy((TaskCol +: BucketCol +: table.keyCols).map(placed.col): _*)
+        .agg(
+          first(when(placed.col(SideCol) === 0, row), ignoreNulls = true).as("__t"),
+          max_by(row, when(placed.col(SideCol) === 1, ord)).as("__u"))
+      val (t, u) = (col("__t"), col("__u"))
+      def ordOf(r: Column) = struct(table.orderingCols.map(c => r.getField(c).as(c)): _*)
+      // the newest batch row is at least as new as the stored one
+      val incomingWins = u.isNotNull && ordOf(u) >= ordOf(t)
+      def out(field: String => Column) = cols.map(c => field(c).as(c)) :+ col(BucketCol)
+      val rows = change match {
+        case Change.Upsert =>
+          val w = when(t.isNull || incomingWins, u).otherwise(t)
+          folded.select(out(w.getField): _*)
+        case Change.SoftDelete =>
+          folded.where(t.isNotNull).select(out(c =>
+            if (c == flag) t.getField(c) && !incomingWins else t.getField(c)): _*)
+        case Change.HardDelete =>
+          folded.where(t.isNotNull && !incomingWins).select(out(t.getField): _*)
+      }
+      Some(Rewrite(hit, rows))
+    }
   }
 
   /** Dead-letter split — the validating front door of every ingest

@@ -3,12 +3,13 @@ package graft.sink
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, hash, lit, max, min, pmod, regexp_extract}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.spark.sql.{Column, DataFrame, GraftSql, Row, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit, regexp_extract, struct}
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 
 import graft.model.{IngestConfig, TargetTable}
-import graft.ops.Dedup
 
 /** A parquet-backed mutable table, hash-bucketed by merge key — the
   * engine's stand-in for the reference's Postgres target tables, designed
@@ -32,12 +33,32 @@ import graft.ops.Dedup
   *       __graft_bucket=3/...parquet   <- v2 rewrote only bucket 3
   * }}}
   *
-  * A merge computes the batch's bucket set from its (deduped, small) keys,
-  * reads ONLY those buckets' dirs, merges, writes them under the next
-  * delta, and the next manifest carries every untouched bucket over by
-  * reference. Bucket count is `TargetTable.buckets`; Spark `hash`
-  * (Murmur3) over the key columns assigns buckets on both the read and
-  * write side, so merge planning never shuffles the target.
+  * A merge computes the batch's bucket set, reads ONLY those buckets'
+  * dirs, merges, writes them under the next delta, and the next manifest
+  * carries every untouched bucket over by reference. Bucket count is
+  * `TargetTable.buckets`; Spark `hash` (Murmur3) over the key columns
+  * assigns buckets on both the read and write side ([[Merge.bucketOf]]).
+  *
+  * Job budget (what a micro-batch pays in Spark round trips):
+  *  - `mergeUpsert` / `mergeSoftDelete` / `mergeHardDelete`: at most 4
+  *    jobs, one shuffle of the touched slice and no broadcast
+  *    ([[Merge.rewrite]]): the batch's bucket ids (which also fills the
+  *    batch cache), the shuffle's map stage, the write. A batch with no
+  *    rows stops after the first and publishes nothing.
+  *  - `lookup` / `lookupByBucketCols` of a local key frame: none inside
+  *    the call; the caller's action on the returned frame is the one job
+  *    (a scan of the chosen bucket dirs under a literal `IN`). A key frame
+  *    that is not local adds the job that collects it.
+  *  - every job an operation starts carries the local property
+  *    [[ParquetTarget.OpKey]] = `<table>:<op>:<version>`.
+  *
+  * Every commit writes each bucket it rewrites as ONE zstd file, from one
+  * writer task; zone-map bounds come from those files' parquet footer
+  * statistics, read on the driver, and the footer of a written file seeds
+  * the schema cache for the version the commit publishes — so a commit
+  * runs no re-read job and a read runs no schema-inference job. Tables
+  * written with several (snappy) files per bucket read and merge the same
+  * way; the next rewrite of a bucket leaves one file.
   *
   * One snapshot per operation: every public method resolves the committed
   * (version, manifest) pair ONCE — one `_LATEST` read, one manifest parse,
@@ -83,12 +104,12 @@ import graft.ops.Dedup
   */
 final class ParquetTarget(spark: SparkSession, val table: TargetTable)
     extends MergeSink {
-  import ParquetTarget.Snapshot
+  import ParquetTarget.{Codec, OpKey, Snapshot}
+  import Merge.BucketCol
 
   private val root = new Path(table.path)
   private val pointer = new Path(root, "_LATEST")
   private val lockPath = new Path(root, "_LOCK")
-  private val BucketCol = "__graft_bucket"
   private val DvFileCol = "__graft_dv_file"
   private val DvPosCol = "__graft_dv_pos"
   private val DvBucketCol = "__graft_dv_bucket"
@@ -144,9 +165,6 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
       throw new IllegalStateException(s"failed to publish $p")
   }
 
-  private def bucketOf(df: DataFrame): Column =
-    pmod(hash(table.hashCols.map(df.col): _*), lit(table.buckets))
-
   /** Parse a manifest into bucket -> relative dir; None unless every
     * referenced dir exists (an older manifest may reference GC'd dirs).
     * The `#buckets=` header pins the table's bucket count: opening an
@@ -191,9 +209,10 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
   /** Snapshot schema per committed version (schemas are uniform across a
     * version's files by the migration invariant, and a committed
     * version's files are immutable) — caching it lets every read pass an
-    * explicit schema and skip the per-read footer-inference Spark job,
+    * explicit schema instead of running Spark's footer-inference job,
     * which at micro-batch cadence costs more driver time than the merge
-    * planning itself. Metadata only; no data or results are cached. */
+    * planning itself. `commit` seeds it with the version it publishes.
+    * Metadata only; no data or results are cached. */
   private val schemaByVersion =
     scala.collection.mutable.HashMap.empty[Long, StructType]
 
@@ -204,12 +223,47 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
     * are the ones GC retires. */
   private val schemaCacheMax = 64
 
-  private def schemaAt(v: Long, anyDir: String): StructType = synchronized {
-    val s = schemaByVersion.getOrElseUpdate(v, readDirs(Seq(anyDir)).schema)
+  /** Version `v`'s schema: cached, else read on the driver from the
+    * footer of one file of `anyDir`. */
+  private def schemaAt(v: Long, anyDir: String): StructType =
+    synchronized(schemaByVersion.get(v)).getOrElse {
+      val f = dataFiles(anyDir).head
+      cacheSchema(v, GraftSql.parquetSchema(spark, f, footer(f)))
+    }
+
+  private def cacheSchema(v: Long, s: StructType): StructType = synchronized {
+    schemaByVersion(v) = s
     if (schemaByVersion.size > schemaCacheMax)
       schemaByVersion --= schemaByVersion.keys.toSeq.sorted
         .dropRight(schemaCacheMax)
     s
+  }
+
+  /** Parquet data files of one bucket dir (no `_` markers or hidden
+    * checksum files). */
+  private def dataFiles(dir: String): Seq[Path] =
+    fs.listStatus(new Path(root, dir)).toSeq.map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+
+  /** Footer of parquet file `p`, read with two positioned reads: a file
+    * ends with the footer, its 4-byte little-endian length and `PAR1`.
+    * A commit reads one footer per written bucket, and
+    * `ParquetFileReader.open` measured about 10× slower per local file. */
+  private def footer(p: Path): ParquetMetadata = {
+    val len = fs.getFileStatus(p).getLen
+    val in = fs.open(p)
+    try {
+      val tail = new Array[Byte](8)
+      in.readFully(len - 8, tail)
+      require(new String(tail, 4, 4, StandardCharsets.US_ASCII) == "PAR1",
+        s"$p: not a plain parquet file")
+      val n = java.nio.ByteBuffer.wrap(tail, 0, 4)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+      val bytes = new Array[Byte](n)
+      in.readFully(len - 8 - n, bytes)
+      new ParquetMetadataConverter().readParquetMetadata(
+        new java.io.ByteArrayInputStream(bytes), ParquetMetadataConverter.NO_FILTER)
+    } finally in.close()
   }
 
   /** Uniform schema of a snapshot (invariant: every file a version
@@ -254,7 +308,9 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
     * (partition pruning on [[DvBucketCol]]) — a reader of one bucket
     * never pays for a corpus-wide delete's full position set. */
   private def readDv(x: Long, buckets: Option[Seq[Int]] = None): DataFrame = {
-    val dv = spark.read.parquet(pathOf('x', x).toString)
+    // the known schema skips the inference job; partition discovery still
+    // adds the shard column when the sidecar is sharded
+    val dv = spark.read.schema(dvSchema).parquet(pathOf('x', x).toString)
     val pruned = buckets match {
       case Some(bs) if dv.columns.contains(DvBucketCol) =>
         dv.filter(col(DvBucketCol).isin(bs: _*))
@@ -345,8 +401,8 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
           val dirByQualified = (mo.values ++ mn.values).toSeq.distinct
             .map(d => fs.makeQualified(new Path(root, d)).toString -> d)
             .toMap
-          delta.select(col(DvFileCol)).distinct()
-            .collect().map(_.getString(0))
+          withOpTag("changes", toVersion)(delta.select(col(DvFileCol)).distinct().collect())
+            .map(_.getString(0))
             .flatMap(f => dirByQualified.get(
               fs.makeQualified(new Path(f).getParent).toString))
             .distinct.toSeq
@@ -412,9 +468,10 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
     * carrying the key columns; extras ignored, duplicates collapsed).
     * Reads ONLY the buckets those keys hash into — the read-side twin of
     * the bucket-pruned merge: a lookup of b distinct keys scans at most
-    * min(b, touched-bucket) dirs of the table, not the table. The key
-    * set is broadcast and matched with a left-semi join, so the scan
-    * side never shuffles. None when the target does not exist. */
+    * min(b, touched-bucket) dirs of the table, not the table. The key set
+    * is collected to the driver (see [[probe]]), so the caller's action
+    * on the result is the lookup's one Spark job. None when the target
+    * does not exist. */
   def lookup(keys: DataFrame): Option[DataFrame] = probe(keys, table.keyCols)
 
   /** Current rows of an explicit set of buckets — the read primitive a
@@ -439,14 +496,30 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
   def lookupByBucketCols(vals: DataFrame): Option[DataFrame] =
     probe(vals, table.hashCols)
 
-  /** Current rows whose `cols` values appear in `vals`: reads only the
-    * buckets the values hash into (`cols` covers the hash columns) and
-    * left-semi joins the broadcast value set. */
+  /** Current rows whose `cols` values appear in `vals` (`cols` covers
+    * the hash columns). The value set is a lookup's, so it is collected to
+    * the driver — a local frame costs no job — and cast to the stored
+    * types; its buckets come from the write side's expression evaluated
+    * over a local relation (no job either), and only those buckets' dirs
+    * are scanned, filtered by a literal `IN` on `cols`. A value with a
+    * NULL never matches, as in a join. A key frame that is not local costs
+    * one collect job, tagged like a mutator's. */
   private def probe(vals: DataFrame, cols: Seq[String]): Option[DataFrame] =
     nonEmptySnapshot().map { s =>
-      val (bk, dirs) = keyedDirs(s, vals.select(cols.map(vals.col): _*).distinct())
-      if (dirs.isEmpty) emptyWithSchema(schemaOf(s))
-      else readDirsDv(dirs, s.version).join(broadcast(bk), cols, "left_semi")
+      val schema = schemaOf(s)
+      val typed = Merge.castTo(vals.select(cols.map(vals.col): _*), schema)
+      val keys = withOpTag("lookup", s.version)(typed.collect()).toSeq.distinct
+        .filterNot(_.anyNull)
+      val local = spark.createDataFrame(java.util.Arrays.asList(keys: _*), typed.schema)
+      val dirs = local.select(Merge.bucketOf(table, local)).collect()
+        .map(_.getInt(0)).distinct.toSeq.flatMap(s.manifest.get).distinct
+      def value(c: String, v: Any): Column = lit(v).cast(typed.schema(c).dataType).as(c)
+      val in =
+        if (cols.size == 1) col(cols.head).isin(keys.map(k => value(cols.head, k.get(0))): _*)
+        else struct(cols.map(col): _*).isin(keys.map(k =>
+          struct(cols.zip(k.toSeq).map { case (c, v) => value(c, v) }: _*)): _*)
+      if (dirs.isEmpty) emptyWithSchema(schema)
+      else readDirsDv(dirs, s.version).where(in)
     }
 
   /** Intact (readable) committed versions, ascending — at most
@@ -532,8 +605,8 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
     }
 
   /** Compaction: rewrite the current snapshot with exactly one file per
-    * bucket (a long-lived target accumulates up to maxWriterPartitions
-    * files per bucket per rewrite). One commit, data unchanged. */
+    * bucket — folds tables written with several files per bucket and
+    * materializes deletion vectors. One commit, data unchanged. */
   def compact(config: IngestConfig): Unit =
     compactClustered(config, _ => Nil)
 
@@ -547,14 +620,15 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
     * semantics as [[compact]]: one version, data unchanged, only the
     * physical order moves. */
   def compactClustered(config: IngestConfig,
-      clusterBy: DataFrame => Seq[Column]): Unit = withCommitLock {
+      clusterBy: DataFrame => Seq[Column]): Unit = mutate("compact") { s =>
     // reads through the deletion vector, so compaction MATERIALIZES
     // vectored deletes — the rewritten files carry no deleted rows and
     // the old DV entries dangle harmlessly against the retired paths
-    nonEmptySnapshot().foreach { s =>
+    if (s.manifest.nonEmpty) {
       val cur = readDirsDv(s.dirs, s.version)
-      commit(s, cur, Map.empty, config, onePerBucket = true,
-        sortWithin = clusterBy(cur))
+      val placed = Merge.place(table, cur, config.maxWriterPartitions, s.manifest.keySet)
+      commit(s, Some(placed.sortWithinPartitions(col(BucketCol) +: clusterBy(cur): _*)),
+        Map.empty)
     }
   }
 
@@ -632,17 +706,18 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
     * hit buckets to rewrite survivors; time travel still serves the
     * pre-delete version while `retainVersions` keeps it. */
   def deleteWhere(config: IngestConfig, pred: Column): Unit =
-    withCommitLock {
-      nonEmptySnapshot().foreach { s =>
+    mutate("delete_where") { s =>
+      if (s.manifest.nonEmpty) {
         val cur = readDirsDv(s.dirs, s.version)
         val matched = cur.filter(coalesce(pred, lit(false)))
-        val hitB = matched.select(bucketOf(matched).as("__b")).distinct()
-          .collect().map(_.getInt(0)).toSet
+        val hitB = Merge.distinctInts(
+          matched.select(Merge.bucketOf(table, matched).as(BucketCol)), BucketCol)
         if (hitB.nonEmpty) {
           val hitDirs = s.manifest.filter { case (b, _) => hitB(b) }
           val keep = readDirsDv(hitDirs.values.toSeq.distinct, s.version)
             .filter(!coalesce(pred, lit(false)))
-          commit(s, keep, s.manifest.view.filterKeys(b => !hitB(b)).toMap, config)
+          commit(s, Some(Merge.place(table, keep, config.maxWriterPartitions, hitB)),
+            s.manifest -- hitB)
         }
       }
     }
@@ -663,11 +738,10 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
     * sidecar predates this one). A NULL predicate result KEEPS the row,
     * exactly like [[deleteWhere]]; no matches ⇒ no commit. */
   def deleteVectored(config: IngestConfig, pred: Column): Unit =
-    withCommitLock {
-      nonEmptySnapshot().foreach { s =>
+    mutate("delete_vectored") { s =>
+      if (s.manifest.nonEmpty)
         commitDv(s, readDirsWithMeta(s.dirs, s.version)
-          .filter(coalesce(pred, lit(false))), config)
-      }
+          .filter(coalesce(pred, lit(false))))
     }
 
   /** Key-addressed deletion vectors — [[deleteVectored]]'s merge-shaped
@@ -678,13 +752,14 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
     * O(touched buckets) read and ZERO rewrite. No matches ⇒ no commit
     * (idempotent replay-safe). */
   def deleteVectoredKeys(keys: DataFrame, config: IngestConfig): Unit =
-    withCommitLock {
-      nonEmptySnapshot().foreach { s =>
-        val (bk, dirs) = keyedDirs(s,
-          keys.select(table.keyCols.map(keys.col): _*).distinct())
+    mutate("delete_vectored") { s =>
+      if (s.manifest.nonEmpty) {
+        val k = Merge.castTo(keys.select(table.keyCols.map(keys.col): _*), schemaOf(s))
+        val dirs = Merge.distinctInts(k.select(Merge.bucketOf(table, k).as(BucketCol)),
+          BucketCol).toSeq.flatMap(s.manifest.get).distinct
         if (dirs.nonEmpty)
           commitDv(s, readDirsWithMeta(dirs, s.version)
-            .join(broadcast(bk), table.keyCols, "left_semi"), config)
+            .join(broadcast(k), table.keyCols, "left_semi"))
       }
     }
 
@@ -692,14 +767,13 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
     * columns) into the snapshot's applicable deletion vector and commit
     * it as a new version carrying every bucket dir unchanged. No hits ⇒
     * no commit. */
-  private def commitDv(s: Snapshot, hits: DataFrame, config: IngestConfig): Unit = {
+  private def commitDv(s: Snapshot, hits: DataFrame): Unit = {
     val matched = hits.select(col(DvFileCol), col(DvPosCol)).persist()
     try {
       if (matched.limit(1).count() > 0) {
         val merged = dvVersionFor(s.version).map(readDv(_))
           .map(_.unionByName(matched)).getOrElse(matched).distinct()
-        commit(s, emptyWithSchema(schemaOf(s)), s.manifest, config,
-          dvOverride = Some(merged))
+        commit(s, None, s.manifest, dvOverride = Some(merged))
       }
     } finally { matched.unpersist(); () }
   }
@@ -707,104 +781,61 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
   private def emptyWithSchema(s: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
 
-  /** Bucket ids the (small, deduped-later) batch touches. */
-  private def bucketsOf(batch: DataFrame): Seq[Int] =
-    batch.select(bucketOf(batch).as("b")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-
-  /** `keys` conformed to the snapshot's stored types, and the dirs of
-    * the buckets they hash into. */
-  private def keyedDirs(s: Snapshot, keys: DataFrame): (DataFrame, Seq[String]) = {
-    val bk = conformKeys(keys, schemaOf(s))
-    (bk, bucketsOf(bk).flatMap(s.manifest.get).distinct)
-  }
-
-  /** Cast every batch column that exists in the snapshot to its STORED
-    * type. Two reasons this must cover ALL columns, not just keys:
-    * Murmur3 hashes differ across integer widths, so a differently-typed
-    * batch key would prune the wrong buckets (and the union-coerced merge
-    * output would hash into buckets the merge never read); and any wider
-    * batch column would union-coerce the rewritten buckets onto a
-    * different parquet type than the carried-over buckets, breaking the
-    * uniform-snapshot-schema invariant multi-dir reads rely on. */
-  private def conformKeys(batch: DataFrame, stored: StructType): DataFrame = {
-    val types = stored.map(f => f.name -> f.dataType).toMap
-    batch.columns.foldLeft(batch) { (df, c) =>
-      types.get(c) match {
-        case Some(t) if df.schema(c).dataType != t =>
-          df.withColumn(c, df.col(c).cast(t))
-        case _ => df
-      }
-    }
-  }
-
   /** Latest-wins merge of one micro-batch — the analog of the sender task
     * executing `INSERT … ON CONFLICT DO UPDATE` (quick_stream
     * `src/upsert.rs:283-295`), bucket-pruned: only buckets containing
     * batch keys are read and rewritten. */
   def mergeUpsert(batch: DataFrame, config: IngestConfig): Unit =
-    rewriteBuckets(batch, config, init = Some(b =>
-      Dedup.latestWins(b, table.keyCols, table.versionCol, table.tieBreakCols)))(
-      (_, bk, _) => bucketsOf(bk))(
-      Merge.upsertBroadcast(_, _, table.keyCols, table.versionCol,
-        table.tieBreakCols, defaults = Map(table.softDeleteCol -> lit(true))))
+    merge("upsert", Merge.Change.Upsert, batch, config)
 
   /** Soft delete (sets `table.softDeleteCol` false). First use migrates
     * the flag column in by rewriting every bucket once, so the snapshot
     * schema stays uniform. */
   def mergeSoftDelete(batch: DataFrame, config: IngestConfig): Unit =
-    rewriteBuckets(batch, config)((s, bk, schema) =>
-      if (schema.fieldNames.contains(table.softDeleteCol)) bucketsOf(bk)
-      else s.manifest.keys.toSeq)(
-      Merge.softDelete(_, _, table.keyCols, table.versionCol,
-        table.tieBreakCols, table.softDeleteCol))
+    merge("soft_delete", Merge.Change.SoftDelete, batch, config)
 
   /** Hard delete (drops the rows). */
   def mergeHardDelete(batch: DataFrame, config: IngestConfig): Unit =
-    rewriteBuckets(batch, config)((_, bk, _) => bucketsOf(bk))(
-      Merge.hardDelete(_, _, table.keyCols, table.versionCol, table.tieBreakCols))
+    merge("hard_delete", Merge.Change.HardDelete, batch, config)
 
-  /** The bucket rewrite every keyed merge shares: take the lease, cache
-    * the batch, resolve the snapshot, conform the batch to the stored
-    * schema, pick the `affected` buckets, read their slice through the
-    * deletion vector (a rewritten bucket must not resurrect rows a
-    * vectored delete already marked), `merge` (slice, batch), commit the
-    * result with every other bucket carried over.
-    *
-    * `init` is set for merges that create rows (upsert): it builds the
-    * first commit of an empty table — a hard delete can legitimately
-    * empty it, and the next upsert re-initializes exactly like a fresh
-    * table instead of crashing on a zero-path schema read — and a batch
-    * whose buckets hold no rows yet still merges against an empty slice.
-    * Deletes leave it unset: on an empty table or slice they are no-ops
-    * and publish nothing. */
-  private def rewriteBuckets(batch: DataFrame, config: IngestConfig,
-      init: Option[DataFrame => DataFrame] = None)(
-      affected: (Snapshot, DataFrame, StructType) => Seq[Int])(
-      merge: (DataFrame, DataFrame) => DataFrame): Unit =
-    withCommitLock { withCached(batch) { b =>
-      val s = snapshot().getOrElse(Snapshot(0L, Map.empty))
-      if (s.manifest.isEmpty) init.foreach(f => commit(s, f(b), Map.empty, config))
-      else {
-        val schema = schemaOf(s)
-        val bk = conformKeys(b, schema)
-        val hit = affected(s, bk, schema)
-        val sliceDirs = hit.flatMap(s.manifest.get).distinct
-        if (sliceDirs.nonEmpty || init.isDefined) {
-          val slice =
-            if (sliceDirs.nonEmpty) readDirsDv(sliceDirs, s.version)
-            else emptyWithSchema(schema)
-          commit(s, merge(slice, bk), s.manifest -- hit, config)
-        }
-      }
-    }}
-
-  /** The batch is scanned several times per merge (bucket listing, dedup,
-    * broadcast sides) — cache it for the duration so the source micro-batch
-    * is read once, not once per use. */
-  private def withCached(batch: DataFrame)(f: DataFrame => Unit): Unit = {
+  /** The one keyed-merge path: under the lease, with the batch cached
+    * (the kernel reads it twice: bucket ids, then the fold), hand the
+    * snapshot to [[Merge.rewrite]] and commit the buckets it rewrites,
+    * carrying every other bucket over. The slice is read through the
+    * deletion vector, so a rewritten bucket cannot resurrect rows a
+    * vectored delete marked. With nothing stored (a new table, or one a
+    * hard delete emptied) an upsert writes the first buckets on the
+    * batch's own schema; a merge that changes nothing publishes nothing. */
+  private def merge(op: String, change: Merge.Change, batch: DataFrame,
+      config: IngestConfig): Unit = mutate(op) { s =>
     val cached = batch.persist()
-    try f(cached) finally { cached.unpersist(); () }
+    try {
+      val stored = if (s.manifest.isEmpty) None else Some(schemaOf(s))
+      Merge.rewrite(table, change, cached, stored, s.manifest.keySet,
+        bs => readDirsDv(bs.flatMap(s.manifest.get).distinct, s.version),
+        config.maxWriterPartitions)
+        .foreach(r => commit(s, Some(r.rows), s.manifest -- r.buckets))
+    } finally { cached.unpersist(); () }
+  }
+
+  /** Run mutator `op` under the writer lease against the committed
+    * snapshot (version 0 with no buckets before the first commit), every
+    * Spark job it starts tagged with the version it would publish
+    * ([[withOpTag]]). */
+  private def mutate(op: String)(f: Snapshot => Unit): Unit = withCommitLock {
+    val s = snapshot().getOrElse(Snapshot(0L, Map.empty))
+    withOpTag(op, s.version + 1L)(f(s))
+  }
+
+  /** Run `f` with the local property [[ParquetTarget.OpKey]] set to
+    * `<table>:<op>:<version>`, so every Spark job it starts names the
+    * operation in the event log, the UI and any listener; the caller's
+    * previous value is restored afterwards. */
+  private def withOpTag[A](op: String, version: Long)(f: => A): A = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(OpKey)
+    sc.setLocalProperty(OpKey, s"${table.name}:$op:$version")
+    try f finally sc.setLocalProperty(OpKey, prev)
   }
 
   /** Single-writer lease: the manifest protocol assumes one writer per
@@ -911,81 +942,71 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
     * the table by accident. Merge-contract columns (keys + ordering) must
     * survive the transform. No-op on an empty/absent target. */
   def migrate(config: IngestConfig)(transform: DataFrame => DataFrame): Unit =
-    withCommitLock {
-      nonEmptySnapshot().foreach { s =>
+    mutate("migrate") { s =>
+      if (s.manifest.nonEmpty) {
         val out = transform(readDirsDv(s.dirs, s.version))
         val missing =
           (table.keyCols ++ table.orderingCols).diff(out.columns.toSeq)
         require(missing.isEmpty,
           s"migration dropped merge-contract columns: ${missing.mkString(", ")}")
-        commit(s, out, Map.empty, config)
+        commit(s, Some(Merge.place(table, out, config.maxWriterPartitions,
+          (0 until table.buckets).toSet)),
+          Map.empty)
       }
     }
 
-  /** Write `df`'s buckets under the delta dir of the version after
-    * `base`, then publish (carried-over ++ rewritten) buckets as that
-    * version. The data fully materializes before any existing state is
-    * referenced or touched (we may be reading dirs we're superseding).
-    * Callers hold the `_LOCK` lease (every public mutator wraps itself in
-    * withCommitLock) and pass the snapshot they resolved under it. */
+  /** Write `placed` — rows with their bucket column, one task per bucket
+    * ([[Merge.place]], [[Merge.rewrite]]) — under the delta dir of the
+    * version after `base`, ONE zstd file per bucket, then publish
+    * (carried-over ++ written) buckets as that version. None writes no
+    * delta (a vectored delete commits only its sidecar). The data fully
+    * materializes before any existing state is referenced or touched (we
+    * may be reading dirs we're superseding). Callers hold the `_LOCK`
+    * lease (every public mutator runs through [[mutate]]) and pass the
+    * snapshot they resolved under it. */
   private def commit(
-      base: Snapshot, df: DataFrame, carryOver: Map[Int, String],
-      config: IngestConfig,
-      onePerBucket: Boolean = false,
-      sortWithin: Seq[Column] = Nil,
+      base: Snapshot, placed: Option[DataFrame], carryOver: Map[Int, String],
       dvOverride: Option[DataFrame] = None): Unit = {
     purgeOrphanDvs(base.version)
     val next = base.version + 1L
     val delta = nameOf('d', next)
     val deltaPath = new Path(root, delta)
-    val bucketed = df.withColumn(BucketCol, bucketOf(df))
-    val placed =
-      if (onePerBucket) {
-        val p = bucketed.repartition(table.buckets, col(BucketCol))
-        if (sortWithin.nonEmpty)
-          p.sortWithinPartitions(col(BucketCol) +: sortWithin: _*)
-        else p
-      }
-      else bucketed.repartition(config.maxWriterPartitions,
-        (BucketCol +: table.keyCols).map(col): _*)
-    placed.write.partitionBy(BucketCol).mode("overwrite").parquet(deltaPath.toString)
-
-    // Buckets actually written (empty merge output writes none).
-    val written = fs.listStatus(deltaPath).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith(s"$BucketCol="))
-      .map(n => n.stripPrefix(s"$BucketCol=").toInt -> s"$delta/$n")
-      .toMap
-    val entries = carryOver ++ written
+    // Buckets actually written (an empty merge output writes none).
+    val written: Map[Int, String] = placed.fold(Map.empty[Int, String]) { p =>
+      p.drop(Merge.TaskCol).write.partitionBy(BucketCol).option("compression", Codec)
+        .mode("overwrite").parquet(deltaPath.toString)
+      fs.listStatus(deltaPath).toSeq.map(_.getPath.getName)
+        .filter(_.startsWith(s"$BucketCol="))
+        .map(n => n.stripPrefix(s"$BucketCol=").toInt -> s"$delta/$n")
+        .toMap
+    }
+    // Footers of the written files, read once on the driver: one seeds the
+    // schema cache for `next`, all of them give the zone bounds.
+    val footers = written.map { case (b, d) => b -> dataFiles(d).map(f => f -> footer(f)) }
+    footers.values.flatten.headOption.foreach { case (f, meta) =>
+      cacheSchema(next, GraftSql.parquetSchema(spark, f, meta))
+    }
 
     // Zone-map sidecar (per-bucket min/max of the version column, for
-    // data-skipping range reads): recompute bounds for the buckets this
-    // commit wrote by scanning ONLY the fresh delta projected to the
-    // version column (footer-cheap; the explicit schema skips the
-    // footer-inference job, partition discovery still supplies the
-    // bucket), carry the base version's bounds for carried-over buckets
-    // (their files did not change). A MISSING sidecar only disables
+    // data-skipping range reads): bounds of the written buckets come from
+    // their files' footer statistics, the base version's bounds carry over
+    // for carried-over buckets (their files did not change). A bucket
+    // without statistics gets no bound. A MISSING sidecar only disables
     // pruning, never correctness. Non-integral version columns get no
     // sidecar (no pruning).
-    val zones = bucketed.schema.find(_.name == table.versionCol)
-      .filter(_.dataType match {
-        case LongType | IntegerType | ShortType | ByteType => true
-        case _ => false
-      })
-      .map { versionField =>
-        val writtenZones: Map[Int, (Long, Long)] =
-          if (written.isEmpty) Map.empty
-          else spark.read.schema(StructType(Seq(versionField)))
-            .parquet(deltaPath.toString)
-            .groupBy(col(BucketCol).cast("int").as("__b"))
-            .agg(min(col(table.versionCol).cast("long")).as("__mn"),
-              max(col(table.versionCol).cast("long")).as("__mx"))
-            .collect()
-            .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2)))
-            .toMap
-        readZones(base.version).getOrElse(Map.empty)
-          .filter { case (b, _) => carryOver.contains(b) } ++ writtenZones
-      }
+    val zones = placed match {
+      case None => readZones(base.version)
+      case Some(p) => p.schema.find(_.name == table.versionCol)
+        .filter(_.dataType match {
+          case LongType | IntegerType | ShortType | ByteType => true
+          case _ => false
+        })
+        .map { _ =>
+          readZones(base.version).getOrElse(Map.empty)
+            .filter { case (b, _) => carryOver.contains(b) } ++
+            footers.flatMap { case (b, files) => versionBounds(files.map(_._2)).map(b -> _) }
+        }
+    }
 
     // Deletion-vector sidecar (only a vectored delete writes one; normal
     // commits leave the previous sidecar authoritative via the
@@ -1003,7 +1024,20 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
         .write.partitionBy(DvBucketCol).mode("overwrite")
         .parquet(pathOf('x', next).toString)
     }
-    publishVersion(next, entries, zones)
+    publishVersion(next, carryOver ++ written, zones)
+  }
+
+  /** [min, max] of the version column over every row group of `files`,
+    * from their footer statistics; None when a row group holding values
+    * has no statistics (unknown bounds: the bucket is always read). */
+  private def versionBounds(files: Seq[ParquetMetadata]): Option[(Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    val chunks = files.flatMap(_.getBlocks.asScala).filter(_.getRowCount > 0).map(
+      _.getColumns.asScala.find(_.getPath.toDotString == table.versionCol).map(_.getStatistics))
+    val values = chunks.flatten.filter(_.hasNonNullValue)
+    if (chunks.exists(_.forall(_.isEmpty)) || values.isEmpty) None
+    else Some((values.map(_.genericGetMin.asInstanceOf[Number].longValue).min,
+      values.map(_.genericGetMax.asInstanceOf[Number].longValue).max))
   }
 
   /** Make version `next` current: zone sidecar (when given), manifest,
@@ -1069,9 +1103,9 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
     * rule would otherwise pick them up). O(metadata) cost: one manifest
     * + sidecar copies, zero data IO — the property that makes rollback
     * instant at 100 TB. */
-  def rollbackTo(v: Long): Unit = withCommitLock {
-    val cur = snapshot().getOrElse(
-      throw new IllegalStateException("rollback on an empty target")).version
+  def rollbackTo(v: Long): Unit = mutate("rollback") { s =>
+    if (s.version == 0L) throw new IllegalStateException("rollback on an empty target")
+    val cur = s.version
     require(v >= 1 && v <= cur, s"version $v out of range 1..$cur")
     val restored = readManifest(v)
     require(restored.isDefined,
@@ -1130,6 +1164,19 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
 }
 
 object ParquetTarget {
+  /** Local property naming the operation behind each Spark job a target
+    * starts: `<table>:<op>:<version>`, op one of upsert, soft_delete,
+    * hard_delete, compact, delete_where, delete_vectored, migrate,
+    * rollback, changes, lookup; version is the one a mutator publishes,
+    * `toVersion` for a change feed, the version read for a lookup's
+    * key collect. */
+  val OpKey = "graft.op"
+
+  /** Data-file codec: a constant of the writer, not a setting. zstd
+    * writes about half the bytes of snappy on the target's row shapes at
+    * the same write and point-read time. */
+  private val Codec = "zstd"
+
   /** One committed version and its manifest (bucket -> dir). Version 0
     * with no entries stands for "nothing committed yet". */
   private final case class Snapshot(version: Long, manifest: Map[Int, String]) {

@@ -100,6 +100,18 @@ object GraftSql {
     } catch { case _: Throwable => () }
   }
 
+  /** The schema a parquet scan of `file` reports — what Spark's schema
+    * inference returns (the stored Spark schema, or the converted parquet
+    * one; every field nullable) — from a footer already read on the
+    * driver, without inference's Spark job. */
+  def parquetSchema(spark: SparkSession, file: org.apache.hadoop.fs.Path,
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata): types.StructType = {
+    import execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)).asNullable
+  }
+
   /** Register function builders into a live session's FunctionRegistry
     * (the post-construction twin of SparkSessionExtensions.injectFunction). */
   def registerFunctions(

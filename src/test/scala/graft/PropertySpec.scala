@@ -83,6 +83,63 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("bucketed merge kernel == upsertBroadcast / softDelete / hardDelete on random batches") {
+    import org.apache.spark.sql.functions.{col, lit}
+    import graft.model.TargetTable
+    val table = TargetTable("kernel", "unused", keyCols = Seq("pkey"),
+      versionCol = "ver", tieBreakCols = Seq("seq"), buckets = 4)
+    type S = (Long, Long, Long, String, Boolean)
+    def rowsOf(d: DataFrame): Set[S] =
+      d.select("pkey", "ver", "seq", "payload", "row_active").collect().map(r =>
+        (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3), r.getBoolean(4))).toSet
+    /** The whole table after the kernel: rewritten buckets ++ the rest. */
+    def viaKernel(change: Merge.Change, target: DataFrame, batch: DataFrame): DataFrame = {
+      val b = target.withColumn(Merge.BucketCol, Merge.bucketOf(table, target))
+      Merge.rewrite(table, change, batch, Some(target.schema), (0 until table.buckets).toSet,
+        bs => b.where(col(Merge.BucketCol).isin(bs: _*)).drop(Merge.BucketCol),
+        maxWriterPartitions = 3)
+        .fold(target) { r =>
+          // a flag migration rewrites every bucket: the rest is empty
+          r.rows.drop(Merge.BucketCol).unionByName(
+            b.where(!col(Merge.BucketCol).isin(r.buckets.toSeq: _*)).drop(Merge.BucketCol),
+            allowMissingColumns = true)
+        }
+    }
+    val rng = new scala.util.Random(424)
+    (1 to 4).foreach { round =>
+      // stored: a random subset of keys 0..19, one row each
+      val stored = (0L until 20L).filter(_ => rng.nextInt(4) > 0).map(k =>
+        (k, rng.nextInt(4).toLong, rng.nextInt(3).toLong, s"t$k", rng.nextBoolean())).toList
+      val byKey = stored.map(r => r._1 -> r).toMap
+      // batch orderings: exact ties with the stored row, stale ones, and
+      // random ones; keys repeat within a batch and 20..29 are never stored
+      def ordering(k: Long): (Long, Long) = byKey.get(k) match {
+        case Some(r) if rng.nextInt(3) == 0 => (r._2, r._3)
+        case Some(r) if rng.nextInt(2) == 0 => (r._2 - 1, r._3)
+        case _ => (rng.nextInt(5).toLong, rng.nextInt(3).toLong)
+      }
+      def batchKeys(n: Int) = List.fill(n)(rng.nextInt(30).toLong)
+      val ups = batchKeys(25).map { k => val (v, s) = ordering(k); (k, v, s, s"u$k.$v.$s") }
+        .distinctBy(r => (r._1, r._2, r._3))
+      val dels = batchKeys(12).map { k => val (v, s) = ordering(k); (k, v, s) }
+      val target = stored.toDF("pkey", "ver", "seq", "payload", "row_active")
+      val upDf = ups.toDF("pkey", "ver", "seq", "payload")
+      val delDf = dels.toDF("pkey", "ver", "seq")
+      val ctx = s"round $round"
+      assert(rowsOf(viaKernel(Merge.Change.Upsert, target, upDf)) ==
+        rowsOf(Merge.upsertBroadcast(target, upDf, Seq("pkey"), "ver", Seq("seq"),
+          defaults = Map("row_active" -> lit(true)))), s"$ctx upsert")
+      assert(rowsOf(viaKernel(Merge.Change.SoftDelete, target, delDf)) ==
+        rowsOf(Merge.softDelete(target, delDf, Seq("pkey"), "ver", Seq("seq"))), s"$ctx soft")
+      val unflagged = target.drop("row_active")
+      assert(rowsOf(viaKernel(Merge.Change.SoftDelete, unflagged, delDf)) ==
+        rowsOf(Merge.softDelete(unflagged, delDf, Seq("pkey"), "ver", Seq("seq"))),
+        s"$ctx soft with flag migration")
+      assert(rowsOf(viaKernel(Merge.Change.HardDelete, target, delDf)) ==
+        rowsOf(Merge.hardDelete(target, delDf, Seq("pkey"), "ver", Seq("seq"))), s"$ctx hard")
+    }
+  }
+
   test("winnow: model-exact, subset of shingles, shared-run guarantee") {
     import org.apache.spark.sql.functions.col
     import graft.functions.TextHash

@@ -4,6 +4,8 @@
 Usage:
     python3 tools/bench_pairs.py --base-rev REV --base-dir DIR [--pairs N]
         [--seed0 S] [--workload NAME ...]
+    python3 tools/bench_pairs.py --traced --base-rev REV --base-dir DIR
+        [--seed0 S] [--workload NAME ...]
     python3 tools/bench_pairs.py --selftest
 
 DIR is a checkout of REV (a `git worktree` or clone). The change side is the
@@ -34,6 +36,12 @@ verdict:
 
 A run that exits non-zero or prints no result line counts as failed; its
 metrics are left out and its attempted/failed counts are unknown.
+
+With --traced the script makes ONE traced run (`--trace 1`) per side per
+gated workload, at seed S, and prints the target layer's metrics side by
+side (LAYER_METRICS, plus bytes written per merge call: bytes_written ÷
+merges). A traced run's timings include the tracer's own cost, so compare
+them only with traced runs.
 """
 import argparse
 import json
@@ -43,6 +51,12 @@ import subprocess
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+LAYER_METRICS = [
+    "target.jobs_per_merge", "target.driver_ms", "target.lookup_jobs",
+    "target.lookup_files_read", "target.bytes_written", "target.files_written",
+    "target.merges",
+]
 
 
 def quartiles(xs):
@@ -83,17 +97,60 @@ def verdict(parent, change, pairs, direction, bound):
     return "within bound", win_frac
 
 
-def run_one(side_dir, workload, seed, seconds):
-    cmd = ["python3", "ingestbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
-    r = subprocess.run(cmd, cwd=side_dir, stdout=subprocess.PIPE,
-                       stderr=subprocess.DEVNULL)
-    line = next((l for l in r.stdout.decode().splitlines()
-                 if l.startswith("{")), None)
-    if r.returncode != 0 or line is None:
+def parse_result(returncode, stdout):
+    """The result of one run from its exit code and standard output: the
+    first line that starts with '{', parsed; None when the run failed, printed
+    no result line or reports incorrect output."""
+    line = next((l for l in stdout.splitlines() if l.startswith("{")), None)
+    if returncode != 0 or line is None:
         return None
     res = json.loads(line)
     return res if res.get("correct") else None
+
+
+def run_one(side_dir, workload, seed, seconds, trace=False):
+    cmd = ["python3", "ingestbench/run.py", "--workload", workload,
+           "--seed", str(seed), "--seconds", str(seconds),
+           "--trace", "1" if trace else "0"]
+    r = subprocess.run(cmd, cwd=side_dir, stdout=subprocess.PIPE,
+                       stderr=subprocess.DEVNULL)
+    return parse_result(r.returncode, r.stdout.decode())
+
+
+def layer_rows(parent, change):
+    """(name, parent value, change value) for LAYER_METRICS and bytes per
+    merge; a value is None when its run failed or lacks the metric."""
+    def get(res, name):
+        m = (res or {}).get("metrics", {}).get(name)
+        return None if m is None else m["value"]
+
+    def per_merge(res):
+        b, n = get(res, "target.bytes_written"), get(res, "target.merges")
+        return b / n if b is not None and n else None
+    rows = [(n, get(parent, n), get(change, n)) for n in LAYER_METRICS]
+    rows.append(("bytes_per_merge", per_merge(parent), per_merge(change)))
+    return rows
+
+
+def fmt_value(v):
+    return "-" if v is None else f"{v:.4g}"
+
+
+def main_traced(a):
+    bench, workloads, sides = setup(a)
+    seconds = bench["run_seconds"]
+    for w in workloads:
+        res = {}
+        for side in ("parent", "change"):
+            res[side] = run_one(sides[side], w, a.seed0, seconds, trace=True)
+            state = "failed" if res[side] is None else "ok"
+            print(f"[bench_pairs] {w} traced seed {a.seed0} {side}: {state}",
+                  file=sys.stderr, flush=True)
+        print(f"== {w}: traced, seed {a.seed0}, {seconds} s runs")
+        print(f"  {'metric':<26} {'parent':>12} {'change':>12}")
+        for n, p, c in layer_rows(res["parent"], res["change"]):
+            print(f"  {n:<26} {fmt_value(p):>12} {fmt_value(c):>12}")
+    return 0
 
 
 def check_base(base_rev, base_dir):
@@ -107,14 +164,19 @@ def check_base(base_rev, base_dir):
         sys.exit(f"bench_pairs: {base_dir} is not a checkout of {base_rev}")
 
 
-def main_pairs(a):
+def setup(a):
+    """BENCHMARK.json, the workloads to run and each side's directory."""
     check_base(a.base_rev, a.base_dir)
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
-    seconds = bench["run_seconds"]
     workloads = a.workload or [w["name"] for w in bench["workloads"]]
+    return bench, workloads, {"parent": os.path.abspath(a.base_dir), "change": ROOT}
+
+
+def main_pairs(a):
+    bench, workloads, sides = setup(a)
+    seconds = bench["run_seconds"]
     metrics = bench["end_to_end"]
-    sides = {"parent": os.path.abspath(a.base_dir), "change": ROOT}
     for name, d in sides.items():
         r = subprocess.run(["python3", "ingestbench/run.py", "--selftest"],
                            cwd=d, stdout=subprocess.DEVNULL)
@@ -196,6 +258,28 @@ def selftest():
     if quartiles([1, 2, 3, 4, 5]) != (2, 3, 4):
         bad += 1
         print(f"FAIL quartiles {quartiles([1, 2, 3, 4, 5])}")
+    # result parsing: noise before the result line, failed and incorrect runs
+    out = 'log line\n{"correct": true, "attempted": 3, "failed": 0, "metrics": ' \
+        '{"target.merges": {"value": 4, "unit": "count"}, ' \
+        '"target.bytes_written": {"value": 1000, "unit": "bytes"}}}\n'
+    res = parse_result(0, out)
+    if res is None or res["attempted"] != 3:
+        bad += 1
+        print(f"FAIL parse_result of a good run: {res}")
+    if parse_result(1, out) is not None or parse_result(0, "no result\n") is not None:
+        bad += 1
+        print("FAIL parse_result must reject a non-zero exit and a missing result line")
+    if parse_result(2, out.replace("true", "false")) is not None:
+        bad += 1
+        print("FAIL parse_result must reject an incorrect run")
+    rows = dict((n, (p, c)) for n, p, c in layer_rows(res, None))
+    if rows["target.merges"] != (4, None) or rows["bytes_per_merge"] != (250, None) \
+            or rows["target.jobs_per_merge"] != (None, None) or len(rows) != len(LAYER_METRICS) + 1:
+        bad += 1
+        print(f"FAIL layer_rows: {rows}")
+    if fmt_value(None) != "-" or fmt_value(10.94) != "10.94":
+        bad += 1
+        print("FAIL fmt_value")
     print("selftest ok" if bad == 0 else f"selftest: {bad} failure(s)")
     return 0 if bad == 0 else 1
 
@@ -208,13 +292,14 @@ def main():
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed0", type=int, default=1)
     ap.add_argument("--workload", action="append")
+    ap.add_argument("--traced", action="store_true")
     ap.add_argument("--selftest", action="store_true")
     a = ap.parse_args()
     if a.selftest:
         return selftest()
     if not a.base_rev or not a.base_dir:
         ap.error("--base-rev and --base-dir are required")
-    return main_pairs(a)
+    return main_traced(a) if a.traced else main_pairs(a)
 
 
 if __name__ == "__main__":
