@@ -238,8 +238,7 @@ object SparkEntry {
     * Across JVMs the token is fresh, so rounds never share state. Both
     * sink shapes are resume-safe: the parquet file sink re-reads rep
     * 1's committed output, and the keyed latest-wins targets are
-    * replay-idempotent by design ([[graft.sink.ParquetTarget]]);
-    * [[BenchRepCheck]] proves run-2 output identity per gate. */
+    * replay-idempotent by design ([[graft.sink.ParquetTarget]]). */
   private[graft] val jvmToken: String =
     java.util.UUID.randomUUID().toString.take(8)
   private[graft] def stableTmp(name: String): String = {

@@ -5,23 +5,15 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. The dump body
-  * is a reusable def so ScaleProbe can replay the SAME correctness
-  * surface over its synthesized sf1.0 replica (r11 verdict item 4 —
-  * turning the probe's timing claim into a correctness claim). */
+  * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
 
   /** Dump `only` (or all) gates over sfDir into outDir: one parquet dir
     * per gate, `oracle_sql.json` for the DuckDB side, `_failed.json`
     * for gates that threw (round-7 lesson: an erred gate must surface
-    * as a red row, not a silent absence). `oracleOverrides` swaps a
-    * gate's oracle SQL in the written JSON — ScaleProbe uses it to
-    * substitute sf1.0-feasible twins for oracles whose driver form is
-    * an intentionally quadratic audit; the DRIVER path never passes
-    * overrides, so driver correctness stays on the independent oracle. */
+    * as a red row, not a silent absence). */
   def dump(spark: SparkSession, sfDir: String, outDir: String,
-      only: Option[Set[String]],
-      oracleOverrides: Map[String, String] = Map.empty): Unit = {
+      only: Option[Set[String]]): Unit = {
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.queries.filter { case (n, _) =>
       only.forall(_.contains(n))
@@ -49,7 +41,6 @@ object Verify {
     } + "\""
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => selected.contains(k) }
-      .map { case (k, v) => k -> oracleOverrides.getOrElse(k, v) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val failedJson = failed

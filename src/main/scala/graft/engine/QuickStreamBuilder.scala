@@ -120,12 +120,14 @@ final class QuickStreamBuilder(spark: SparkSession) {
     new MultiTableDeleteStream(config, requiredJdbcSinks,
       s"$requiredCheckpoint/multi_del", tableCol, soft)
 
+  /** One sink per distinct database table, so routes aliasing a table
+    * share one sink and are applied one after the other. */
   private def requiredJdbcSinks: Map[String, graft.sink.MergeSink] = {
     require(jdbcCatalog.nonEmpty, "multi-table jdbc catalog is empty")
-    jdbcCatalog.map { case (n, t) =>
+    Streams.shared(jdbcCatalog)(t => (t.url, t.table)) { t =>
       val sink = new JdbcSink(t, jdbcDialect)
       sink.probe() // fail fast per table, driver-side (src/upsert.rs:80-83)
-      (n, sink: graft.sink.MergeSink)
+      sink
     }
   }
   private def requiredCheckpoint: String = checkpointDir.getOrElse(

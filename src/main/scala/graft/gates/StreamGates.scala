@@ -240,7 +240,7 @@ private[graft] object StreamGates {
       // invocation, resurrecting rep 1's vector-deleted keys while the
       // RESUMED delete stream (nothing new to process) cannot re-delete
       // them — the one streaming gate whose semantics need a fresh dir
-      // (BenchRepCheck run-2 mismatch pinned this).
+      // (a second run in one JVM returned a different result).
       val tmp = Files.createTempDirectory("graft_s22_").toString
       val target = TargetTable("events_vdel", s"$tmp/target",
         keyCols = key, versionCol = ver, tieBreakCols = tie, buckets = 4)

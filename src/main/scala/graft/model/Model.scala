@@ -117,13 +117,6 @@ final case class IngestConfig(
 
 object IngestConfig {
   /** Default source admission rate (reference
-    * `max_records_per_cycle_batch`). `GRAFT_STREAM_RATE` overrides it
-    * for callers that leave the field at its default — a probe knob:
-    * the sf1.0 scale verification raises it so the whole 10-file
-    * replica lands in ONE micro-batch and the single-batch
-    * determinism contract (which the DuckDB oracles replay) holds at
-    * scale too. Deployments configure the field explicitly; the
-    * driver never sets the env, so its behavior is unchanged. */
-  val DefaultRate: Long =
-    sys.env.get("GRAFT_STREAM_RATE").map(_.toLong).getOrElse(10000L)
+    * `max_records_per_cycle_batch`). */
+  val DefaultRate: Long = 10000L
 }

@@ -74,7 +74,6 @@ object Components {
           .select(col("id"),
             least(col("comp"), coalesce(col("__nbr_min"), col("comp"))).as("comp"),
             (col("__nbr_min") < col("comp")).as("__changed"))
-        org.apache.spark.sql.GraftSql.planDump("cc_round", body)
         val (next, _, chg) = org.apache.spark.sql.GraftSql.checkpointCount(
           body, Some("__changed"))
         changed = chg
@@ -431,7 +430,6 @@ object Components {
               least(col("color"), coalesce(col("__in"), col("color")))
                 .as("color"),
               (col("__in") < col("color")).as("__chg"))
-          org.apache.spark.sql.GraftSql.planDump("scc_forward_round", body)
           val (next, _, chg) = org.apache.spark.sql.GraftSql.checkpointCount(
             body, Some("__chg"))
           changed = chg

@@ -45,16 +45,11 @@ object Graph {
     * AND ordering — at scale each fixpoint round then exchanges (and
     * sorts) only the O(V) state table, never the O(E) edge table (guide
     * §2.4, r13 verdict item 3). One setup exchange buys one per round;
-    * results are identical (repartition is pure layout).
-    *
-    * Scale-dependent knob, parameterised per the optimization contract:
-    * `GRAFT_PREPARTITION_EDGES=0` disables it (and is how the 'before'
-    * plan evidence is dumped). Default ON — the local bench carries the
-    * one extra setup exchange, the cluster posture saves a per-round
-    * O(E) exchange. */
+    * results are identical (repartition is pure layout). A local run
+    * pays the one extra setup exchange; a cluster saves a per-round O(E)
+    * exchange. */
   private[ops] def keyLayout(df: DataFrame, key: String): DataFrame =
-    if (sys.env.get("GRAFT_PREPARTITION_EDGES").contains("0")) df
-    else df.repartition(col(key)).sortWithinPartitions(key)
+    df.repartition(col(key)).sortWithinPartitions(key)
 
   /** Fixed-point PageRank.
     *
@@ -115,7 +110,6 @@ object Graph {
           .select(col("node"), expr(
             s"$telQ + ($dampNum * __acc) div $dampDen")
             .as("rank_q"))
-        org.apache.spark.sql.GraftSql.planDump("pagerank_round", body)
         val next = body.localCheckpoint()
         org.apache.spark.sql.GraftSql.freeLocalCheckpoint(ckpt)
         ckpt = next
@@ -179,7 +173,6 @@ object Graph {
         // coalesce(__w, __prev) without re-joining the labels per round.
         val body = nodes.join(winner, Seq("node"), "left_outer")
           .select(col("node"), coalesce(col("__w"), col("node")).as("lbl"))
-        org.apache.spark.sql.GraftSql.planDump("labelprop_round", body)
         val next = body.localCheckpoint()
         org.apache.spark.sql.GraftSql.freeLocalCheckpoint(ckpt)
         ckpt = next
@@ -1492,7 +1485,6 @@ object Graph {
           .select(col("node"),
             (col("__tel") + expr(s"($dampNum * __acc) div $dampDen"))
               .as("rank_q"))
-        org.apache.spark.sql.GraftSql.planDump("ppr_round", body)
         val next = body.localCheckpoint()
         org.apache.spark.sql.GraftSql.freeLocalCheckpoint(ckpt)
         ckpt = next
@@ -1546,7 +1538,6 @@ object Graph {
         val body = contrib
           .select(col("node"), expr(
             s"$q + ($alphaNum * __acc) div $alphaDen").as("katz_q"))
-        org.apache.spark.sql.GraftSql.planDump("katz_round", body)
         val next = body.localCheckpoint()
         org.apache.spark.sql.GraftSql.freeLocalCheckpoint(ckpt)
         ckpt = next

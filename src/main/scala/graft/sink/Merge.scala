@@ -119,12 +119,7 @@ object Merge {
       .where(tM.col("__t_ord").isNull || ordering(u, versionCol, tieBreakCols) >= tM.col("__t_ord"))
       .select(outCols.map(u.col): _*)
 
-    val out = survivors.unionByName(winners)
-    // Dev-only (no-op in driver/bench runs): evidence for the one-
-    // broadcast-per-merge claim — with AQE off the formatted plan shows
-    // one BroadcastExchange + one ReusedExchange (r13 verdict item 3).
-    org.apache.spark.sql.GraftSql.planDump("merge_upsert_broadcast", out)
-    out
+    survivors.unionByName(winners)
   }
 
   /** Batch-scale merge: one full-outer shuffle join on the key; per-column

@@ -80,26 +80,6 @@ object GraftSql {
     (out, total, flagged)
   }
 
-  /** Dev-only plan-evidence hook: when `$GRAFT_PLAN_DIR` is set, write
-    * `df`'s formatted physical plan to `$GRAFT_PLAN_DIR/<name>.txt`. The
-    * FIRST call per name per JVM wins, so a call inside an iterative
-    * operator's loop dumps round 1's INNER plan — the part a post-
-    * checkpoint `explain()` can no longer show (it prints only a `Scan
-    * ExistingRDD` stub; r13 verdict item 2). No-op when the env var is
-    * unset (driver/bench runs); never throws. */
-  private lazy val planDir: Option[String] = sys.env.get("GRAFT_PLAN_DIR")
-  private val planSeen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  def planDump(name: String, df: Dataset[_]): Unit = planDir.foreach { d =>
-    if (planSeen.add(name)) try {
-      val qe = df.asInstanceOf[classic.Dataset[_]].queryExecution
-      val txt = qe.explainString(execution.ExplainMode.fromString("formatted"))
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(d, s"$name.txt"), txt)
-      ()
-    } catch { case _: Throwable => () }
-  }
-
   /** The schema a parquet scan of `file` reports — what Spark's schema
     * inference returns (the stored Spark schema, or the converted parquet
     * one; every field nullable) — from a footer already read on the

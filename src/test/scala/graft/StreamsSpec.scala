@@ -1,7 +1,13 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -9,7 +15,7 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.engine.{MultiTableUpsertStream, QuickStreamBuilder, UpsertStream}
 import graft.model.{IngestConfig, TargetTable}
 import graft.ops.Dedup
-import graft.sink.ParquetTarget
+import graft.sink.{MergeSink, ParquetTarget}
 
 /** End-to-end Structured Streaming behavior of the processors (reference
   * lifecycle §3): micro-batched latest-wins ingestion converges to the
@@ -235,5 +241,152 @@ class StreamsSpec extends SparkSpec {
     // And the next merge commits on top of the recovered version.
     sink.mergeUpsert(Seq(Ev(3, 1, 4, "c")).toDF(), cfg)
     assert(sink.read().get.count() == 3)
+  }
+
+  // ---- multi-table fan-out: concurrency, routing jobs, local properties ----
+
+  private val BatchKey = "streaming.sql.batchId"
+
+  /** One sink call as the sink saw it: its thread, the batch id local
+    * property, and the slice's columns. */
+  private final case class Call(thread: String, batchId: String, columns: Seq[String])
+
+  /** Sink that records each call and runs no Spark job; with a latch it
+    * first counts down and then waits (30 s) for every other holder of
+    * the latch, so it only returns if the sinks of one batch run at
+    * once. With `inner` it then merges into it. */
+  private final class Rendezvous(latch: Option[CountDownLatch],
+      inner: Option[MergeSink] = None) extends MergeSink {
+    val calls = new ConcurrentLinkedQueue[Call]()
+    override def mergeUpsert(b: DataFrame, c: IngestConfig): Unit = {
+      calls.add(Call(Thread.currentThread().getName,
+        spark.sparkContext.getLocalProperty(BatchKey), b.columns.toSeq))
+      latch.foreach { l =>
+        l.countDown()
+        if (!l.await(30, TimeUnit.SECONDS))
+          throw new IllegalStateException("the other sinks of the batch never started")
+      }
+      inner.foreach(_.mergeUpsert(b, c))
+    }
+    override def mergeSoftDelete(b: DataFrame, c: IngestConfig): Unit = ()
+    override def mergeHardDelete(b: DataFrame, c: IngestConfig): Unit = ()
+  }
+
+  /** A started Spark job: its graft.op tag, batch id, query id and tasks. */
+  private final case class Job(tag: Option[String], batchId: Option[String],
+      queryId: Option[String], tasks: Int)
+
+  /** Every job started while `f` runs. */
+  private def jobProps(f: => Unit): Seq[Job] = {
+    val sc = spark.sparkContext
+    val seen = new ConcurrentLinkedQueue[Job]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        seen.add(Job(prop(ParquetTarget.OpKey), prop(BatchKey),
+          prop("sql.streaming.queryId"), e.stageInfos.map(_.numTasks).sum))
+        ()
+      }
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try f
+    finally {
+      ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    seen.asScala.toSeq
+  }
+
+  /** A stream holding `rows` as one batch of 4 partitions, routed by
+    * column `table`. */
+  private def routed(rows: (String, Long, Long, Long, String)*)(
+      implicit sql: org.apache.spark.sql.SQLContext): DataFrame = {
+    val events = MemoryStream[(String, Long, Long, Long, String)](4)
+    events.addData(rows)
+    events.toDF().toDF("table", "pkey", "ver", "seq", "payload")
+  }
+
+  test("multi-table fan-out applies the tables of one batch concurrently") {
+    implicit val sql = spark.sqlContext
+    val dir = tmp("graft_fanout_latch_")
+    val latch = new CountDownLatch(2)
+    val sinks = Map[String, MergeSink](
+      "alpha" -> new Rendezvous(Some(latch)), "beta" -> new Rendezvous(Some(latch)))
+    val cfg = IngestConfig(name = s"fanout-latch-${System.nanoTime()}",
+      maxWriterPartitions = 2, checkpointDir = Some(s"$dir/ckpt"))
+    val src = routed(("alpha", 1L, 1L, 1L, "a"), ("beta", 1L, 1L, 2L, "b"))
+    val q = new MultiTableUpsertStream(cfg, sinks, s"$dir/ckpt", "table")
+      .run(src, Trigger.AvailableNow())
+    q.awaitTermination() // throws if a sink's rendezvous timed out
+    assert(latch.getCount == 0)
+    assert(sinks.values.forall(_.asInstanceOf[Rendezvous].calls.size == 1))
+  }
+
+  test("multi-table fan-out routes a batch in exactly one Spark job, " +
+      "of one task per slot share of each sink") {
+    implicit val sql = spark.sqlContext
+    val dir = tmp("graft_fanout_route_")
+    val sinks = Seq("r1", "r2", "r3").map(n => n -> new Rendezvous(None)).toMap
+    val cfg = IngestConfig(name = s"fanout-route-${System.nanoTime()}",
+      maxWriterPartitions = 2, checkpointDir = Some(s"$dir/ckpt"))
+    val src = routed(("r1", 1L, 1L, 1L, "a"), ("r2", 1L, 1L, 2L, "b"),
+      ("r3", 2L, 1L, 3L, "c"), ("ghost", 3L, 1L, 4L, "dropped"))
+    var queryId = ""
+    val jobs = jobProps {
+      val q = new MultiTableUpsertStream(cfg, sinks, s"$dir/ckpt", "table")
+        .run(src, Trigger.AvailableNow())
+      queryId = q.id.toString
+      q.awaitTermination()
+    }
+    val batchJobs = jobs.filter(_.queryId.contains(queryId))
+    assert(batchJobs.size == 1, s"routing ran ${batchJobs.size} jobs: $batchJobs")
+    assert(batchJobs.forall(_.batchId.contains("0")))
+    // 4 source partitions, 4 task slots shared by 3 sinks: one partition
+    assert(batchJobs.head.tasks == 1, s"$batchJobs")
+    sinks.foreach { case (n, s) =>
+      val calls = s.calls.asScala.toSeq
+      assert(calls.size == 1, n)
+      assert(calls.head.columns == Seq("pkey", "ver", "seq", "payload"), n)
+    }
+  }
+
+  test("concurrent merges tag their own jobs and keep the batch thread's properties") {
+    implicit val sql = spark.sqlContext
+    val dir = tmp("graft_fanout_tags_")
+    def tt(n: String) = TargetTable(n, s"$dir/$n",
+      keyCols = Seq("pkey"), versionCol = "ver", tieBreakCols = Seq("seq"), buckets = 4)
+    val latch = new CountDownLatch(2)
+    val sinks = Map("alpha" -> tt("alpha"), "beta" -> tt("beta")).map { case (n, t) =>
+      n -> new Rendezvous(Some(latch), Some(new ParquetTarget(spark, t)))
+    }
+    val cfg = IngestConfig(name = s"fanout-tags-${System.nanoTime()}",
+      maxWriterPartitions = 2, checkpointDir = Some(s"$dir/ckpt"))
+    val rows = (1L to 40L).flatMap(k =>
+      Seq(("alpha", k, 1L, k, s"a$k"), ("beta", k, 2L, k, s"b$k")))
+    val src = routed(rows: _*)
+    var queryId = ""
+    val jobs = jobProps {
+      val q = new MultiTableUpsertStream(cfg, sinks, s"$dir/ckpt", "table")
+        .run(src, Trigger.AvailableNow())
+      queryId = q.id.toString
+      q.awaitTermination()
+    }.filter(_.queryId.contains(queryId))
+    val tagged = jobs.flatMap(_.tag).groupBy(_.takeWhile(_ != ':'))
+    assert(tagged.keySet == Set("alpha", "beta"), s"$jobs")
+    assert(tagged("alpha").forall(_ == "alpha:upsert:1"), s"${tagged("alpha")}")
+    assert(tagged("beta").forall(_ == "beta:upsert:1"), s"${tagged("beta")}")
+    assert(jobs.forall(_.batchId.contains("0")), s"every job carries the batch id: $jobs")
+    sinks.foreach { case (n, s) =>
+      val calls = s.calls.asScala.toSeq
+      assert(calls.map(_.batchId) == Seq("0"), n)
+      assert(calls.forall(_.thread.startsWith("graft-fanout-")), s"$n: $calls")
+    }
+    assert(sinks.values.map(_.calls.peek().thread).toSet.size == 2)
+    for ((n, v) <- Seq("alpha" -> 1L, "beta" -> 2L)) {
+      val state = readTarget(tt(n)).collect()
+        .map(r => r.getAs[Long]("pkey") -> r.getAs[Long]("ver")).toMap
+      assert(state == (1L to 40L).map(_ -> v).toMap, n)
+    }
   }
 }

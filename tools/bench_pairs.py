@@ -38,9 +38,11 @@ A run that exits non-zero or prints no result line counts as failed; its
 metrics are left out and its attempted/failed counts are unknown.
 
 With --traced the script makes ONE traced run (`--trace 1`) per side per
-gated workload, at seed S, and prints the target layer's metrics side by
-side (LAYER_METRICS, plus bytes written per merge call: bytes_written ÷
-merges). A traced run's timings include the tracer's own cost, so compare
+gated workload, at seed S, and prints the target, engine, executor and
+JDBC layer metrics side by side (LAYER_METRICS, plus bytes written per merge
+call: bytes_written ÷ merges). engine.route_ms is a batch's addBatch time
+minus the summed time of its sink calls, so it reads below the routing time,
+or below zero, when a multi-table batch applies its tables concurrently. A traced run's timings include the tracer's own cost, so compare
 them only with traced runs.
 """
 import argparse
@@ -55,7 +57,8 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 LAYER_METRICS = [
     "target.jobs_per_merge", "target.driver_ms", "target.lookup_jobs",
     "target.lookup_files_read", "target.bytes_written", "target.files_written",
-    "target.merges",
+    "target.merges", "engine.addbatch_ms", "engine.route_ms", "exec.busy_frac",
+    "jdbc.merge_ms",
 ]
 
 

@@ -65,8 +65,8 @@ def connect(sf_dir):
         con.execute("SET temp_directory = '/tmp/duckspill'")
         con.execute("SET max_temp_directory_size = '60GB'")
     for t in TABLES:
-        # driver fixtures are single files; ScaleProbe replicas are
-        # Spark-written directories -> glob their part files
+        # driver fixtures are single files; a Spark-written table is a
+        # directory -> glob its part files
         path = f"{sf_dir}/{t}.parquet"
         src = f"{path}/*.parquet" if os.path.isdir(path) else path
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
