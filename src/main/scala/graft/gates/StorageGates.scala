@@ -15,6 +15,7 @@ import graft.model.{IngestConfig, TargetTable}
 import graft.multimodal.Multimodal
 import graft.ops.{BatchSplit, Dedup, Html, NearDup, Similarity, TextAnalysis}
 import graft.sink.Merge
+import graft.sink.Merge.Change.{HardDelete, SoftDelete, Upsert}
 import graft.gates.GateOracleShared._
 
 /** Storage-engine gates: merge/delete sinks, versioned bucketed targets, CDC (o*).
@@ -89,13 +90,13 @@ private[graft] object StorageGates {
         "c_custkey", "ts", Seq("c_mktsegment", "c_acctbal"))
     }),
 
-    // ---- O5: join-based MERGE (broadcast micro-batch strategy) ----
+    // ---- O5: keyed MERGE (upsert fold over the whole target) ----
     "o5_merge_upsert" -> ((s, dir) => {
       val ev = eventRecords(s, dir)
       val existing = Dedup.latestWins(
         ev.filter(col("event_id") % 2 === 0), key, ver, tie)
       val incoming = ev.filter(col("event_id") % 2 === 1)
-      stateOut(Merge.upsertBroadcast(existing, incoming, key, ver, tie))
+      stateOut(Merge.mergeFrame(existing, incoming, Upsert, key, ver, tie))
     }),
 
     // ---- O5 replay idempotence — the exactly-once-by-idempotence
@@ -108,19 +109,21 @@ private[graft] object StorageGates {
       val existing = Dedup.latestWins(
         ev.filter(col("event_id") % 2 === 0), key, ver, tie)
       val incoming = ev.filter(col("event_id") % 2 === 1)
-      val once = Merge.upsertBroadcast(existing, incoming, key, ver, tie)
-      val twice = Merge.upsertBroadcast(once, incoming, key, ver, tie)
+      val once = Merge.mergeFrame(existing, incoming, Upsert, key, ver, tie)
+      val twice = Merge.mergeFrame(once, incoming, Upsert, key, ver, tie)
       val replayedHalf = incoming.filter(col("event_id") % 4 === 1)
-      stateOut(Merge.upsertBroadcast(twice, replayedHalf, key, ver, tie))
+      stateOut(Merge.mergeFrame(twice, replayedHalf, Upsert, key, ver, tie))
     }),
 
-    // ---- O5: same semantics via the full-outer shuffle strategy ----
+    // ---- O5 with the halves' roles swapped: the odd half is stored,
+    //      the even half incoming — latest-wins is blind to which side
+    //      a row arrives on, so the state is the same ----
     "o5b_merge_shuffle" -> ((s, dir) => {
       val ev = eventRecords(s, dir)
       val existing = Dedup.latestWins(
-        ev.filter(col("event_id") % 2 === 0), key, ver, tie)
-      val incoming = ev.filter(col("event_id") % 2 === 1)
-      stateOut(Merge.upsertShuffle(existing, incoming, key, ver, tie))
+        ev.filter(col("event_id") % 2 === 1), key, ver, tie)
+      val incoming = ev.filter(col("event_id") % 2 === 0)
+      stateOut(Merge.mergeFrame(existing, incoming, Upsert, key, ver, tie))
     }),
 
     // ---- O6: soft delete (tombstone flag) ----
@@ -128,7 +131,7 @@ private[graft] object StorageGates {
       val ev = eventRecords(s, dir)
       val target = Dedup.latestWins(ev, key, ver, tie)
       val dels = ev.filter(col("event_type") === "error")
-      Merge.softDelete(target, dels, key, ver, tie, "row_active")
+      Merge.mergeFrame(target, dels, SoftDelete, key, ver, tie, "row_active")
         .select(
           col("pkey"),
           col("modified_date_us"),
@@ -142,8 +145,8 @@ private[graft] object StorageGates {
       val ev = eventRecords(s, dir)
       val target = Dedup.latestWins(ev, key, ver, tie)
       val dels = ev.filter(col("event_type") === "error")
-      val once = Merge.softDelete(target, dels, key, ver, tie, "row_active")
-      Merge.softDelete(once, dels, key, ver, tie, "row_active")
+      val once = Merge.mergeFrame(target, dels, SoftDelete, key, ver, tie, "row_active")
+      Merge.mergeFrame(once, dels, SoftDelete, key, ver, tie, "row_active")
         .select(
           col("pkey"),
           col("modified_date_us"),
@@ -156,7 +159,7 @@ private[graft] object StorageGates {
       val ev = eventRecords(s, dir)
       val target = Dedup.latestWins(ev, key, ver, tie)
       val dels = ev.filter(col("event_type") === "error")
-      Merge.hardDelete(target, dels, key, ver, tie)
+      Merge.mergeFrame(target, dels, HardDelete, key, ver, tie)
         .select(
           col("pkey"),
           col("modified_date_us"),
@@ -481,11 +484,10 @@ private[graft] object StorageGates {
       val (valid, bad) = graft.sink.Merge.quarantineSplit(ev, Seq(
         "low_value" -> (col("value") >= 0.05),
         "error_type" -> (col("event_type") =!= "error")))
-      // the valid side must still merge: exercise the broadcast upsert
-      // against an empty target and fold its row count into the output
+      // the valid side must still merge: upsert it into an empty target
+      // and fold its row count into the output
       val target = valid.limit(0)
-      val merged = graft.sink.Merge.upsertBroadcast(
-        target, valid, Seq("event_id"), "ts")
+      val merged = Merge.mergeFrame(target, valid, Upsert, Seq("event_id"), "ts")
       bad.select(col("event_id"), col("quarantine_reason"))
         .crossJoin(broadcast(
           merged.agg(count(lit(1)).as("n_merged"))))

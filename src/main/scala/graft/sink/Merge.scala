@@ -2,12 +2,11 @@ package graft.sink
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{BooleanType, StructType}
 
 import graft.model.TargetTable
-import graft.ops.Dedup
 
-/** Join-based MERGE — the Spark-native replacement for the reference's
+/** Keyed MERGE — the Spark-native replacement for the reference's
   * prepared `INSERT … ON CONFLICT (pk) DO UPDATE` statements
   * (quick_stream `src/upsert.rs:24-29`, canonical SQL
   * `src/upsert/multi_table_upsert.rs:651`) and its soft-delete twin
@@ -23,24 +22,14 @@ import graft.ops.Dedup
   *    update — the reference has no such guard because it relies on
   *    single-writer arrival order, which doesn't exist on a cluster).
   *
-  * Scale notes (100 TB target, micro-batch updates):
-  * `upsertBroadcast` never shuffles the target. The micro-batch side is
-  * deduped (small), broadcast, and the target is only scanned — survivors
-  * via a broadcast left join, displaced rows via a broadcast left-semi
-  * restriction. Shuffle volume is O(|batch|), independent of target size.
-  * `upsertShuffle` is the classic full-outer merge for batch-sized updates;
-  * with the target bucketed/pre-partitioned by key only the updates side
-  * exchanges. These four frame-level merges are the reference semantics;
-  * [[rewrite]] is the bucketed kernel `ParquetTarget` runs, checked
-  * against them in `PropertySpec`.
+  * One fold encodes these rules ([[fold]]): the stored row and the newest
+  * incoming row of each key meet in one aggregate. It has two entries that
+  * differ only in what the aggregate groups by besides the keys:
+  * [[rewrite]], the bucketed kernel every `ParquetTarget` merge runs,
+  * groups the touched buckets' rows by writer task and bucket; [[mergeFrame]]
+  * applies a change to a whole target frame and groups by the keys alone.
   */
 object Merge {
-
-  private def ordering(df: DataFrame, versionCol: String, tie: Seq[String]): Column =
-    struct((versionCol +: tie).map(df.col): _*)
-
-  private def keyCond(left: DataFrame, right: DataFrame, keyCols: Seq[String]): Column =
-    keyCols.map(k => left.col(k) === right.col(k)).reduce(_ && _)
 
   /** Conform `updates` to the target's column set. Target columns absent
     * from the batch are filled from `defaults` (e.g. a soft-delete flag
@@ -72,125 +61,6 @@ object Merge {
       else df.withColumn(c,
         defaults.getOrElse(c, lit(null)).cast(tTypes(c)))
     }
-  }
-
-  /** Micro-batch merge: target is scanned, never shuffled; updates are
-    * deduped then broadcast. Preferred inside `foreachBatch`. */
-  def upsertBroadcast(
-      target: DataFrame,
-      updates: DataFrame,
-      keyCols: Seq[String],
-      versionCol: String,
-      tieBreakCols: Seq[String] = Nil,
-      defaults: Map[String, Column] = Map.empty): DataFrame = {
-    val outCols = target.columns.toSeq
-    val conformed = conform(target.schema, updates, defaults,
-      keyCols ++ (versionCol +: tieBreakCols))
-    val u = Dedup.latestWins(conformed.select(outCols.map(conformed.col): _*),
-      keyCols, versionCol, tieBreakCols)
-
-    // (key, ordering) pairs of the incoming batch, broadcast to every task.
-    val uOrd = u.select(
-      (keyCols.map(u.col) :+ ordering(u, versionCol, tieBreakCols).as("__u_ord")): _*)
-    val bOrd = broadcast(uOrd)
-
-    // Target rows that survive: no incoming row for the key, or the stored
-    // row is strictly newer (incoming wins ties — ON CONFLICT DO UPDATE).
-    val tOrdCol = ordering(target, versionCol, tieBreakCols)
-    val survivors = target
-      .join(bOrd, keyCols.map(k => target.col(k) === bOrd.col(k)).reduce(_ && _), "left_outer")
-      .where(bOrd.col("__u_ord").isNull || tOrdCol > bOrd.col("__u_ord"))
-      .select(outCols.map(target.col): _*)
-
-    // Incoming rows that win: restrict the (huge) target to the batch's
-    // keys with a broadcast semi-join — O(|batch|) rows — then compare.
-    // The semi-join probes bOrd (already key-unique: u is latest-wins
-    // deduped) rather than a separate distinct-keys frame, so the
-    // survivors' and winners' broadcast subplans are identical and
-    // ReuseExchange materializes ONE broadcast per merge, not two.
-    val tMatched = target
-      .join(bOrd,
-        keyCols.map(k => target.col(k) === bOrd.col(k)).reduce(_ && _),
-        "left_semi")
-    val tM = tMatched.select(
-      (keyCols.map(tMatched.col) :+ ordering(tMatched, versionCol, tieBreakCols).as("__t_ord")): _*)
-    val winners = u
-      .join(broadcast(tM), keyCols.map(k => u.col(k) === tM.col(k)).reduce(_ && _), "left_outer")
-      .where(tM.col("__t_ord").isNull || ordering(u, versionCol, tieBreakCols) >= tM.col("__t_ord"))
-      .select(outCols.map(u.col): _*)
-
-    survivors.unionByName(winners)
-  }
-
-  /** Batch-scale merge: one full-outer shuffle join on the key; per-column
-    * winner selection. Use when updates are comparable in size to the
-    * target (backfills, reprocessing). */
-  def upsertShuffle(
-      target: DataFrame,
-      updates: DataFrame,
-      keyCols: Seq[String],
-      versionCol: String,
-      tieBreakCols: Seq[String] = Nil,
-      defaults: Map[String, Column] = Map.empty): DataFrame = {
-    val outCols = target.columns.toSeq
-    val conformed = conform(target.schema, updates, defaults,
-      keyCols ++ (versionCol +: tieBreakCols))
-    val u = Dedup.latestWins(conformed.select(outCols.map(conformed.col): _*),
-      keyCols, versionCol, tieBreakCols)
-    val t = target
-    val joined = t.join(u, keyCond(t, u, keyCols), "full_outer")
-    val uPresent = u.col(keyCols.head).isNotNull
-    val tPresent = t.col(keyCols.head).isNotNull
-    val uWins = uPresent && (!tPresent ||
-      ordering(u, versionCol, tieBreakCols) >= ordering(t, versionCol, tieBreakCols))
-    joined.select(outCols.map(c => when(uWins, u.col(c)).otherwise(t.col(c)).as(c)): _*)
-  }
-
-  /** Soft delete (reference "data soft deleter", `src/delete.rs:252`):
-    * flips `flagCol` to false for keys with a tombstone at least as new as
-    * the stored row. Adds `flagCol` (default true) if absent. */
-  def softDelete(
-      target: DataFrame,
-      deletes: DataFrame,
-      keyCols: Seq[String],
-      versionCol: String,
-      tieBreakCols: Seq[String] = Nil,
-      flagCol: String = "row_active"): DataFrame = {
-    val withFlag =
-      if (target.columns.contains(flagCol)) target
-      else target.withColumn(flagCol, lit(true))
-    val d = Dedup.latestWins(deletes, keyCols, versionCol, tieBreakCols)
-    val dOrd = d.select(
-      (keyCols.map(d.col) :+ ordering(d, versionCol, tieBreakCols).as("__d_ord")): _*)
-    val bD = broadcast(dOrd)
-    val joined = withFlag.join(bD,
-      keyCols.map(k => withFlag.col(k) === bD.col(k)).reduce(_ && _), "left_outer")
-    val deleted = bD.col("__d_ord").isNotNull &&
-      bD.col("__d_ord") >= ordering(withFlag, versionCol, tieBreakCols)
-    val outCols = withFlag.columns.toSeq
-    joined.select(outCols.map {
-      case c if c == flagCol => (withFlag.col(flagCol) && !deleted).as(flagCol)
-      case c => withFlag.col(c)
-    }: _*)
-  }
-
-  /** Hard delete: drops rows whose key has a tombstone at least as new. */
-  def hardDelete(
-      target: DataFrame,
-      deletes: DataFrame,
-      keyCols: Seq[String],
-      versionCol: String,
-      tieBreakCols: Seq[String] = Nil): DataFrame = {
-    val d = Dedup.latestWins(deletes, keyCols, versionCol, tieBreakCols)
-    val dOrd = d.select(
-      (keyCols.map(d.col) :+ ordering(d, versionCol, tieBreakCols).as("__d_ord")): _*)
-    val bD = broadcast(dOrd)
-    val joined = target.join(bD,
-      keyCols.map(k => target.col(k) === bD.col(k)).reduce(_ && _), "left_outer")
-    joined
-      .where(bD.col("__d_ord").isNull ||
-        bD.col("__d_ord") < ordering(target, versionCol, tieBreakCols))
-      .select(target.columns.toSeq.map(target.col): _*)
   }
 
   /** What a keyed merge does to the stored row of each batch key. */
@@ -262,92 +132,145 @@ object Merge {
     * (carrying [[BucketCol]], placed one task per bucket). */
   private[graft] final case class Rewrite(buckets: Set[Int], rows: DataFrame)
 
-  /** The merge kernel of a bucket-organized target — the one place that
-    * decides which buckets a merge touches.
-    *
-    *  1. `batch` (cached by the caller) is conformed to the stored schema
-    *     ([[conform]]: defaults, fail-loud column checks; stored types via
-    *     [[castTo]]) and its bucket ids are collected — job 1, which also
-    *     fills the cache ([[distinctInts]]: per-partition sets, no shuffle,
-    *     at most buckets × partitions ints on the driver, so no driver-size
-    *     limit applies and no setting bounds it). An empty batch stops
-    *     here: None, nothing to publish.
-    *  2. Only those buckets are read (`readBuckets`, through the deletion
-    *     vector), unioned with the batch tagged by side, and placed one
-    *     task per bucket ([[place]]). Each key folds in ONE aggregate
-    *     grouped by (bucket, keys): the stored row (at most one per key)
-    *     and the newest batch row. The placement already satisfies the
-    *     aggregate's distribution, so the merge is one shuffle of the
-    *     touched slice — no broadcast, no second exchange — and the write
-    *     runs in the aggregate's tasks.
-    *
-    * Per key: an upsert keeps the newest batch row unless the stored row
-    * is strictly newer (the incoming row wins exact ties; duplicate batch
-    * rows dedupe in the same pass); a soft or hard delete keeps the stored
-    * row, flagged or dropped when the newest tombstone is at least as new.
-    *
-    * `stored` is the committed schema (None: nothing stored yet — only an
-    * upsert then writes, on the batch's own schema) and `storedBuckets`
-    * the buckets holding rows. The first soft delete on a table without
-    * `softDeleteCol` rewrites every stored bucket with the flag added, so
-    * a snapshot keeps one schema. None when nothing changes. */
-  private[graft] def rewrite(table: TargetTable, change: Change, batch: DataFrame,
-      stored: Option[StructType], storedBuckets: Set[Int],
-      readBuckets: Seq[Int] => DataFrame, maxWriterPartitions: Int): Option[Rewrite] = {
-    val flag = table.softDeleteCol
-    val contract = table.keyCols ++ table.orderingCols
-    val migrate = change == Change.SoftDelete &&
-      stored.exists(!_.fieldNames.contains(flag))
-    val schema = stored.fold(batch.schema) { s =>
-      if (migrate) s.add(flag, org.apache.spark.sql.types.BooleanType) else s
+  /** The schema `change` leaves on a table whose committed schema is
+    * `stored` (None: nothing stored yet — only an upsert then writes, on
+    * the batch's own schema). The first soft delete on a table without
+    * `flag` adds it, so a table keeps one schema. */
+  private def schemaAfter(change: Change, stored: Option[StructType],
+      batch: StructType, flag: String): StructType =
+    stored.fold(batch) { s =>
+      if (change == Change.SoftDelete && !s.fieldNames.contains(flag)) s.add(flag, BooleanType)
+      else s
     }
+
+  /** `batch` as the incoming side of `change` on a table of `schema`,
+    * in the table's column order: conformed ([[conform]]: an upsert
+    * defaults `flag` to active; a delete keeps only the merge-contract
+    * columns) and cast to the stored types ([[castTo]]). */
+  private def incoming(change: Change, schema: StructType, batch: DataFrame,
+      contract: Seq[String], flag: String): DataFrame = {
     val conformed = change match {
       case Change.Upsert => conform(schema, batch, Map(flag -> lit(true)), contract)
       case _ => conform(schema,
         batch.select(contract.filter(batch.columns.contains).map(batch.col): _*),
         Map.empty, contract)
     }
-    val cols = schema.fieldNames.toSeq
     val typed = castTo(conformed, schema)
-    val incoming = typed.select(cols.map(typed.col) :+ bucketOf(table, typed).as(BucketCol): _*)
+    typed.select(schema.fieldNames.toSeq.map(typed.col): _*)
+  }
+
+  /** The one latest-wins fold behind both entries. `stored` (at most one
+    * row per key) and `incoming` hold the columns of `schema` and those
+    * `prefix` columns that exist before `place`; a stored side without
+    * `flag` (the first soft delete) gets it true on every row. Both sides
+    * are tagged, unioned and placed, and each key folds in ONE aggregate
+    * grouped by `prefix` ++ keys: the stored row and the newest incoming
+    * row. Per key: an upsert keeps the newest incoming row unless the
+    * stored row is strictly newer (the incoming row wins exact ties;
+    * duplicate incoming rows dedupe in the same pass); a soft or hard
+    * delete keeps the stored row, flagged or dropped when the newest
+    * tombstone is at least as new. NULL keys fold as one key. Output:
+    * the columns of `schema`, then `prefix`. */
+  private def fold(change: Change, schema: StructType, keyCols: Seq[String],
+      orderingCols: Seq[String], flag: String, stored: Option[DataFrame],
+      incoming: DataFrame, prefix: Seq[String],
+      place: DataFrame => DataFrame): DataFrame = {
+    val cols = schema.fieldNames.toSeq
+    def side(df: DataFrame, tag: Int): DataFrame = {
+      val f = if (cols.contains(flag) && !df.columns.contains(flag)) df.withColumn(flag, lit(true))
+        else df
+      f.select(cols.map(f.col) ++ prefix.filter(f.columns.contains).map(f.col) :+
+        lit(tag).as(SideCol): _*)
+    }
+    val placed = place((stored.map(side(_, 0)).toSeq :+ side(incoming, 1)).reduce(_ unionByName _))
+    val row = struct(cols.map(placed.col): _*)
+    val ord = struct(orderingCols.map(c => placed.col(c).as(c)): _*)
+    val folded = placed.groupBy((prefix ++ keyCols).map(placed.col): _*)
+      .agg(
+        first(when(placed.col(SideCol) === 0, row), ignoreNulls = true).as("__t"),
+        max_by(row, when(placed.col(SideCol) === 1, ord)).as("__u"))
+    val (t, u) = (col("__t"), col("__u"))
+    def ordOf(r: Column) = struct(orderingCols.map(c => r.getField(c).as(c)): _*)
+    // the newest incoming row is at least as new as the stored one
+    val incomingWins = u.isNotNull && ordOf(u) >= ordOf(t)
+    def out(field: String => Column) = cols.map(c => field(c).as(c)) ++ prefix.map(col)
+    change match {
+      case Change.Upsert =>
+        val w = when(t.isNull || incomingWins, u).otherwise(t)
+        folded.select(out(w.getField): _*)
+      case Change.SoftDelete =>
+        folded.where(t.isNotNull).select(out(c =>
+          if (c == flag) t.getField(c) && !incomingWins else t.getField(c)): _*)
+      case Change.HardDelete =>
+        folded.where(t.isNotNull && !incomingWins).select(out(t.getField): _*)
+    }
+  }
+
+  /** The merge kernel of a bucket-organized target — the one place that
+    * decides which buckets a merge touches. Its rows come from [[fold]],
+    * grouped by (writer task, bucket).
+    *
+    *  1. `batch` (cached by the caller) is conformed to the stored schema
+    *     ([[incoming]]) and its bucket ids are collected — job 1, which
+    *     also fills the cache ([[distinctInts]]: per-partition sets, no
+    *     shuffle, at most buckets × partitions ints on the driver, so no
+    *     driver-size limit applies and no setting bounds it). An empty
+    *     batch stops here: None, nothing to publish.
+    *  2. Only those buckets are read (`readBuckets`, through the deletion
+    *     vector) and folded with the batch, placed one task per bucket
+    *     ([[place]]). The placement already satisfies the aggregate's
+    *     distribution, so the merge is one shuffle of the touched slice —
+    *     no broadcast, no second exchange — and the write runs in the
+    *     aggregate's tasks.
+    *
+    * `stored` is the committed schema (None: nothing stored yet) and
+    * `storedBuckets` the buckets holding rows. The first soft delete on a
+    * table without `softDeleteCol` rewrites every stored bucket with the
+    * flag added, so a snapshot keeps one schema. None when nothing
+    * changes. */
+  private[graft] def rewrite(table: TargetTable, change: Change, batch: DataFrame,
+      stored: Option[StructType], storedBuckets: Set[Int],
+      readBuckets: Seq[Int] => DataFrame, maxWriterPartitions: Int): Option[Rewrite] = {
+    val flag = table.softDeleteCol
+    val schema = schemaAfter(change, stored, batch.schema, flag)
+    // the first soft delete adds the flag: every stored bucket is rewritten
+    val migrate = stored.exists(_.length < schema.length)
+    val in = incoming(change, schema, batch, table.keyCols ++ table.orderingCols, flag)
+    val tagged = in.withColumn(BucketCol, bucketOf(table, in))
     // a delete on a table with nothing stored changes nothing: no job
     val touched =
       if (stored.isEmpty && change != Change.Upsert) Set.empty[Int]
-      else distinctInts(incoming, BucketCol)
+      else distinctInts(tagged, BucketCol)
     val hit = if (migrate) storedBuckets ++ touched else touched
     val sliceBuckets = if (stored.isEmpty) Set.empty[Int] else hit.intersect(storedBuckets)
     if (touched.isEmpty || (sliceBuckets.isEmpty && change != Change.Upsert)) None
     else {
       val slice = if (sliceBuckets.isEmpty) None else Some {
         val s = readBuckets(sliceBuckets.toSeq.sorted)
-        val f = if (migrate) s.withColumn(flag, lit(true)) else s
-        f.select(cols.map(f.col) :+ bucketOf(table, f).as(BucketCol) :+ lit(0).as(SideCol): _*)
+        s.withColumn(BucketCol, bucketOf(table, s))
       }
-      val sides = slice.toSeq :+ incoming.withColumn(SideCol, lit(1))
-      val placed = place(table, sides.reduce(_ unionByName _), maxWriterPartitions, hit)
-      val row = struct(cols.map(placed.col): _*)
-      val ord = struct(table.orderingCols.map(c => placed.col(c).as(c)): _*)
-      val folded = placed.groupBy((TaskCol +: BucketCol +: table.keyCols).map(placed.col): _*)
-        .agg(
-          first(when(placed.col(SideCol) === 0, row), ignoreNulls = true).as("__t"),
-          max_by(row, when(placed.col(SideCol) === 1, ord)).as("__u"))
-      val (t, u) = (col("__t"), col("__u"))
-      def ordOf(r: Column) = struct(table.orderingCols.map(c => r.getField(c).as(c)): _*)
-      // the newest batch row is at least as new as the stored one
-      val incomingWins = u.isNotNull && ordOf(u) >= ordOf(t)
-      def out(field: String => Column) = cols.map(c => field(c).as(c)) :+ col(BucketCol)
-      val rows = change match {
-        case Change.Upsert =>
-          val w = when(t.isNull || incomingWins, u).otherwise(t)
-          folded.select(out(w.getField): _*)
-        case Change.SoftDelete =>
-          folded.where(t.isNotNull).select(out(c =>
-            if (c == flag) t.getField(c) && !incomingWins else t.getField(c)): _*)
-        case Change.HardDelete =>
-          folded.where(t.isNotNull && !incomingWins).select(out(t.getField): _*)
-      }
-      Some(Rewrite(hit, rows))
+      val rows = fold(change, schema, table.keyCols, table.orderingCols, flag, slice, tagged,
+        Seq(TaskCol, BucketCol), place(table, _, maxWriterPartitions, hit))
+      Some(Rewrite(hit, rows.drop(TaskCol)))
     }
+  }
+
+  /** `change` applied to a whole `target` frame with [[fold]], grouped by
+    * the keys alone: no buckets, no placement. The result has the
+    * target's columns, plus `flagCol` (true on every stored row before
+    * the tombstones apply) when a soft delete meets a target without it.
+    *
+    * Preconditions, those of a stored table: `target` holds at most one
+    * row per key (a duplicate keeps one of its rows); NULL keys fold as
+    * one key, as in [[rewrite]]. `batch` may repeat keys: its newest row
+    * per key applies. */
+  private[graft] def mergeFrame(target: DataFrame, batch: DataFrame, change: Change,
+      keyCols: Seq[String], versionCol: String, tieBreakCols: Seq[String] = Nil,
+      flagCol: String = "row_active"): DataFrame = {
+    val ordering = versionCol +: tieBreakCols
+    val schema = schemaAfter(change, Some(target.schema), batch.schema, flagCol)
+    fold(change, schema, keyCols, ordering, flagCol, Some(target),
+      incoming(change, schema, batch, keyCols ++ ordering, flagCol), Nil, identity)
   }
 
   /** Dead-letter split — the validating front door of every ingest

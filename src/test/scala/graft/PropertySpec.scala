@@ -52,18 +52,16 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("merge: broadcast == shuffle == dedup-of-whole on random splits") {
+  test("merge: frame entry == dedup-of-whole on random splits") {
     val rng = new scala.util.Random(422)
     (1 to 3).foreach { _ =>
       val rows = randomRows(rng, 40)
       val cut = 1 + rng.nextInt(math.max(1, rows.size - 2))
       val (a, b) = rows.splitAt(cut)
       val target = Dedup.latestWins(df(a), Seq("pkey"), "ver", Seq("seq"))
-      val viaB = Merge.upsertBroadcast(target, df(b), Seq("pkey"), "ver", Seq("seq"))
-      val viaS = Merge.upsertShuffle(target, df(b), Seq("pkey"), "ver", Seq("seq"))
-      val whole = model(rows)
-      assert(canonRows(viaB) == whole, s"broadcast diverged (cut=$cut)")
-      assert(canonRows(viaS) == whole, s"shuffle diverged (cut=$cut)")
+      val merged = Merge.mergeFrame(target, df(b), Merge.Change.Upsert,
+        Seq("pkey"), "ver", Seq("seq"))
+      assert(canonRows(merged) == model(rows), s"merge diverged (cut=$cut)")
     }
   }
 
@@ -77,14 +75,15 @@ class PropertySpec extends SparkSpec {
       val incremental = batches.tail.foldLeft(
         Dedup.latestWins(df(batches.head), Seq("pkey"), "ver", Seq("seq"))) {
         (acc, batch) =>
-          Merge.upsertBroadcast(acc, df(batch), Seq("pkey"), "ver", Seq("seq"))
+          Merge.mergeFrame(acc, df(batch), Merge.Change.Upsert, Seq("pkey"), "ver", Seq("seq"))
       }
       assert(canonRows(incremental) == model(rows))
     }
   }
 
-  test("bucketed merge kernel == upsertBroadcast / softDelete / hardDelete on random batches") {
-    import org.apache.spark.sql.functions.{col, lit}
+  test("bucketed kernel and frame entry == latest-wins model on random batches") {
+    import org.apache.spark.sql.functions.col
+    import graft.LatestWinsModel.State
     import graft.model.TargetTable
     val table = TargetTable("kernel", "unused", keyCols = Seq("pkey"),
       versionCol = "ver", tieBreakCols = Seq("seq"), buckets = 4)
@@ -92,6 +91,7 @@ class PropertySpec extends SparkSpec {
     def rowsOf(d: DataFrame): Set[S] =
       d.select("pkey", "ver", "seq", "payload", "row_active").collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3), r.getBoolean(4))).toSet
+    def rowsOfModel(m: State): Set[S] = m.map { case (k, (v, s, p, a)) => (k, v, s, p, a) }.toSet
     /** The whole table after the kernel: rewritten buckets ++ the rest. */
     def viaKernel(change: Merge.Change, target: DataFrame, batch: DataFrame): DataFrame = {
       val b = target.withColumn(Merge.BucketCol, Merge.bucketOf(table, target))
@@ -125,18 +125,22 @@ class PropertySpec extends SparkSpec {
       val target = stored.toDF("pkey", "ver", "seq", "payload", "row_active")
       val upDf = ups.toDF("pkey", "ver", "seq", "payload")
       val delDf = dels.toDF("pkey", "ver", "seq")
-      val ctx = s"round $round"
-      assert(rowsOf(viaKernel(Merge.Change.Upsert, target, upDf)) ==
-        rowsOf(Merge.upsertBroadcast(target, upDf, Seq("pkey"), "ver", Seq("seq"),
-          defaults = Map("row_active" -> lit(true)))), s"$ctx upsert")
-      assert(rowsOf(viaKernel(Merge.Change.SoftDelete, target, delDf)) ==
-        rowsOf(Merge.softDelete(target, delDf, Seq("pkey"), "ver", Seq("seq"))), s"$ctx soft")
+      val state: State = stored.map { case (k, v, s, p, a) => k -> ((v, s, p, a)) }.toMap
+      // the first soft delete on a table without the flag sets it on every row
+      val migrated = state.map { case (k, r) => k -> r.copy(_4 = true) }
       val unflagged = target.drop("row_active")
-      assert(rowsOf(viaKernel(Merge.Change.SoftDelete, unflagged, delDf)) ==
-        rowsOf(Merge.softDelete(unflagged, delDf, Seq("pkey"), "ver", Seq("seq"))),
-        s"$ctx soft with flag migration")
-      assert(rowsOf(viaKernel(Merge.Change.HardDelete, target, delDf)) ==
-        rowsOf(Merge.hardDelete(target, delDf, Seq("pkey"), "ver", Seq("seq"))), s"$ctx hard")
+      Seq(
+        ("upsert", Merge.Change.Upsert, target, upDf, LatestWinsModel.upsert(state, ups)),
+        ("soft", Merge.Change.SoftDelete, target, delDf, LatestWinsModel.softDelete(state, dels)),
+        ("soft with flag migration", Merge.Change.SoftDelete, unflagged, delDf,
+          LatestWinsModel.softDelete(migrated, dels)),
+        ("hard", Merge.Change.HardDelete, target, delDf, LatestWinsModel.hardDelete(state, dels))
+      ).foreach { case (what, change, t, batch, want) =>
+        val ctx = s"round $round $what"
+        assert(rowsOf(viaKernel(change, t, batch)) == rowsOfModel(want), s"$ctx kernel")
+        assert(rowsOf(Merge.mergeFrame(t, batch, change, Seq("pkey"), "ver", Seq("seq"))) ==
+          rowsOfModel(want), s"$ctx frame")
+      }
     }
   }
 

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row}
 
+import graft.LatestWinsModel.{Rec, State}
 import graft.model.{IngestConfig, TargetTable}
 import graft.sink.ParquetTarget
 
@@ -18,14 +19,6 @@ class TargetModelSpec extends SparkSpec {
   import spark.implicits._
 
   private val cfg = IngestConfig(name = "model-spec", maxWriterPartitions = 2)
-
-  /** Stored row of one key: (ver, seq, payload, row_active). */
-  private type Rec = (Long, Long, String, Boolean)
-  private type State = Map[Long, Rec]
-
-  /** Whether an incoming (ver, seq) is at least as new as the stored row. */
-  private def supersedes(v: Long, s: Long, r: Rec): Boolean =
-    Ordering[(Long, Long)].gteq((v, s), (r._1, r._2))
 
   private def rowsOf(df: DataFrame): Set[(Long, Rec)] =
     df.select("pkey", "ver", "seq", "payload", "row_active").collect()
@@ -59,8 +52,6 @@ class TargetModelSpec extends SparkSpec {
     // need the incoming-wins rule and every dedup has one winner
     def tombstones(n: Int): Seq[(Long, Long, Long)] =
       randomKeys(n).map(k => (k, rng.nextLong(12L), nextSeq()))
-    def latest[A](xs: Seq[(Long, Long, Long, A)]): Map[Long, (Long, Long, Long, A)] =
-      xs.groupBy(_._1).map { case (k, g) => k -> g.maxBy(x => (x._2, x._3)) }
 
     var model: State = Map.empty
     val states = scala.collection.mutable.Map.empty[Long, State]
@@ -79,27 +70,16 @@ class TargetModelSpec extends SparkSpec {
         case 0 => // mergeUpsert: latest (ver, seq) per key wins
           val batch = randomKeys(1 + rng.nextInt(12)).map(k =>
             (k, rng.nextLong(12L), nextSeq(), s"p$seq"))
-          val wins = latest(batch)
-          wins.foreach { case (k, (_, v, s, p)) =>
-            if (model.get(k).forall(supersedes(v, s, _)))
-              model += k -> ((v, s, p, true))
-          }
+          model = LatestWinsModel.upsert(model, batch)
           sink.mergeUpsert(batch.map { case (k, v, s, p) => (k, v, s, p, true) }
             .toDF("pkey", "ver", "seq", "payload", "row_active"), cfg)
         case 1 => // mergeSoftDelete: a tombstone at least as new flips the flag
           val ds = tombstones(1 + rng.nextInt(6))
-          latest(ds.map { case (k, v, s) => (k, v, s, ()) }).foreach {
-            case (k, (_, v, s, _)) =>
-              model.get(k).filter(supersedes(v, s, _))
-                .foreach(r => model += k -> r.copy(_4 = false))
-          }
+          model = LatestWinsModel.softDelete(model, ds)
           sink.mergeSoftDelete(ds.toDF("pkey", "ver", "seq"), cfg)
         case 2 => // mergeHardDelete: a tombstone at least as new drops the row
           val ds = tombstones(1 + rng.nextInt(6))
-          latest(ds.map { case (k, v, s) => (k, v, s, ()) }).foreach {
-            case (k, (_, v, s, _)) =>
-              if (model.get(k).exists(supersedes(v, s, _))) model -= k
-          }
+          model = LatestWinsModel.hardDelete(model, ds)
           sink.mergeHardDelete(ds.toDF("pkey", "ver", "seq"), cfg)
         case 3 => // deleteVectoredKeys: every current row of the keys goes
           val ks = randomKeys(1 + rng.nextInt(4))

@@ -35,7 +35,13 @@ verdict:
   within bound otherwise
 
 A run that exits non-zero or prints no result line counts as failed; its
-metrics are left out and its attempted/failed counts are unknown.
+metrics are left out and its attempted/failed counts are unknown. Each run's
+standard error goes to its own log, LOG_DIR/<side>-<workload>-<seed>.log
+(LOG_DIR is `bench_pairs` under the system temporary directory; a traced
+run's log ends in -traced.log, and a later run with the same name replaces
+it). For every run that failed or reports failed operations the script
+prints the log's path and the log's `[ingestbench]` lines, which carry the
+first failed operation's exception.
 
 With --traced the script makes ONE traced run (`--trace 1`) per side per
 gated workload, at seed S, and prints the target, engine, executor and
@@ -46,13 +52,17 @@ or below zero, when a multi-table batch applies its tables concurrently. A trace
 them only with traced runs.
 """
 import argparse
+import contextlib
+import io
 import json
 import os
 import statistics
 import subprocess
 import sys
+import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+LOG_DIR = os.path.join(tempfile.gettempdir(), "bench_pairs")
 
 LAYER_METRICS = [
     "target.jobs_per_merge", "target.driver_ms", "target.lookup_jobs",
@@ -111,13 +121,35 @@ def parse_result(returncode, stdout):
     return res if res.get("correct") else None
 
 
-def run_one(side_dir, workload, seed, seconds, trace=False):
+def log_path(side, workload, seed, trace=False):
+    """Where the standard error of one run goes."""
+    return os.path.join(LOG_DIR, f"{side}-{workload}-{seed}{'-traced' if trace else ''}.log")
+
+
+def report_failures(res, log):
+    """For a run that failed (res None) or reports failed operations, the
+    lines to print: the log's path, then its `[ingestbench]` lines. None
+    for a clean run."""
+    if res is not None and not res.get("failed"):
+        return None
+    what = "failed" if res is None else f"reports {res['failed']} failed operation(s)"
+    with open(log, errors="replace") as f:
+        lines = [l.rstrip("\n") for l in f if l.startswith("[ingestbench]")]
+    return [f"[bench_pairs] run {what}; stderr in {log}"] + ["  " + l for l in lines]
+
+
+def run_one(side, side_dir, workload, seed, seconds, trace=False):
     cmd = ["python3", "ingestbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds),
            "--trace", "1" if trace else "0"]
-    r = subprocess.run(cmd, cwd=side_dir, stdout=subprocess.PIPE,
-                       stderr=subprocess.DEVNULL)
-    return parse_result(r.returncode, r.stdout.decode())
+    os.makedirs(LOG_DIR, exist_ok=True)
+    log = log_path(side, workload, seed, trace)
+    with open(log, "wb") as err:
+        r = subprocess.run(cmd, cwd=side_dir, stdout=subprocess.PIPE, stderr=err)
+    res = parse_result(r.returncode, r.stdout.decode())
+    for line in report_failures(res, log) or []:
+        print(line, file=sys.stderr, flush=True)
+    return res
 
 
 def layer_rows(parent, change):
@@ -145,7 +177,7 @@ def main_traced(a):
     for w in workloads:
         res = {}
         for side in ("parent", "change"):
-            res[side] = run_one(sides[side], w, a.seed0, seconds, trace=True)
+            res[side] = run_one(side, sides[side], w, a.seed0, seconds, trace=True)
             state = "failed" if res[side] is None else "ok"
             print(f"[bench_pairs] {w} traced seed {a.seed0} {side}: {state}",
                   file=sys.stderr, flush=True)
@@ -191,7 +223,7 @@ def main_pairs(a):
             seed = a.seed0 + i
             order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
             for side in order:
-                res = run_one(sides[side], w, seed, seconds)
+                res = run_one(side, sides[side], w, seed, seconds)
                 runs[side].append(res)
                 state = "failed" if res is None else "ok"
                 print(f"[bench_pairs] {w} pair {i + 1}/{a.pairs} seed {seed} "
@@ -283,6 +315,38 @@ def selftest():
     if fmt_value(None) != "-" or fmt_value(10.94) != "10.94":
         bad += 1
         print("FAIL fmt_value")
+    # stderr logs: one per run under LOG_DIR, a traced run's apart
+    if log_path("parent", "w", 3) != os.path.join(LOG_DIR, "parent-w-3.log") \
+            or log_path("parent", "w", 3, trace=True) != os.path.join(LOG_DIR, "parent-w-3-traced.log"):
+        bad += 1
+        print("FAIL log_path")
+    # run_one on a stand-in run.py that fails one operation: its stderr
+    # lands in the run's log, and the report names the log and repeats only
+    # the [ingestbench] lines
+    with tempfile.TemporaryDirectory() as side:
+        os.mkdir(os.path.join(side, "ingestbench"))
+        with open(os.path.join(side, "ingestbench", "run.py"), "w") as f:
+            f.write("import sys\n"
+                    "print('noise', file=sys.stderr)\n"
+                    "print('[ingestbench] lookups failed: boom', file=sys.stderr)\n"
+                    "print('{\"correct\": true, \"attempted\": 2, \"failed\": 1}')\n")
+        err = io.StringIO()
+        with contextlib.redirect_stderr(err):
+            res = run_one("selftest", side, "stand-in", 0, 1)
+        log = log_path("selftest", "stand-in", 0)
+        with open(log) as f:
+            logged = f.read()
+        if res is None or res["failed"] != 1 \
+                or logged != "noise\n[ingestbench] lookups failed: boom\n" \
+                or err.getvalue() != f"[bench_pairs] run reports 1 failed operation(s); " \
+                f"stderr in {log}\n  [ingestbench] lookups failed: boom\n":
+            bad += 1
+            print(f"FAIL run_one must keep stderr in its log and report it: {res} {err.getvalue()!r}")
+        if report_failures(None, log)[0] != f"[bench_pairs] run failed; stderr in {log}" \
+                or report_failures({"failed": 0}, log) is not None:
+            bad += 1
+            print("FAIL report_failures: a failed run is reported, a clean one is not")
+        os.unlink(log)
     print("selftest ok" if bad == 0 else f"selftest: {bad} failure(s)")
     return 0 if bad == 0 else 1
 
