@@ -16,25 +16,20 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session timezone: the engine's timestamp contract (epoch-micro
   *    columns everywhere) assumes it.
   *  - graft SQL functions registered via the extensions mechanism.
+  *
+  * The streaming state store stays Spark's default: on the s1/s2 bench
+  * queries at sf0.1 (4 warm reps each) RocksDB and the in-memory
+  * HDFS-backed store are within noise of each other — the stream cost is
+  * micro-batch machinery + the target merge, not state access. For
+  * large-state production streams (per-key state no longer fits the
+  * heap) set `spark.sql.streaming.stateStore.providerClass` to
+  * `org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`
+  * on the builder [[builder]] returns.
   */
 object GraftSession {
 
-  /** Streaming state store provider. Measured on the s1/s2 bench queries
-    * at sf0.1 (4 warm reps each): RocksDB and the default in-memory
-    * HDFS-backed store are within noise of each other — the stream cost
-    * is micro-batch machinery + the target merge, not state access — so
-    * the default stays Spark's default. Set `GRAFT_STATE_STORE=rocksdb`
-    * for large-state production streams (100-TB posture: per-key state no
-    * longer fits the heap; RocksDB spills to local SSD and bounds GC). */
-  private def stateStoreProvider: Option[String] =
-    sys.env.get("GRAFT_STATE_STORE").map {
-      case "rocksdb" =>
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      case other => other
-    }
-
-  def builder(appName: String, cores: Int): SparkSession.Builder = {
-    val b = SparkSession.builder()
+  def builder(appName: String, cores: Int): SparkSession.Builder =
+    SparkSession.builder()
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
@@ -42,9 +37,6 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.GraftExtensions")
-    stateStoreProvider.fold(b)(p =>
-      b.config("spark.sql.streaming.stateStore.providerClass", p))
-  }
 
   /** Local session for tests/benches: `local[cores]`, UI off. */
   def local(appName: String, cores: Int): SparkSession = {

@@ -267,18 +267,14 @@ object Sources {
       .load()
 }
 
-/** Single-table latest-wins upsert ingestion (reference §3.1) into any
-  * [[MergeSink]] — bucketed parquet by default, a JDBC database for true
-  * reference parity (`new UpsertStream(cfg, new JdbcSink(jt), ckpt)`;
-  * JDBC sinks have no storage path, so the checkpoint seed is explicit). */
-final class UpsertStream(
-    config: IngestConfig,
-    sink: MergeSink,
+/** What every processor shares: `run` starts `source` through
+  * [[Streams.start]] with the processor's config and default checkpoint
+  * (the config's trigger unless one is given) and hands each micro-batch
+  * to [[applyBatch]]. */
+private[engine] abstract class Processor(config: IngestConfig,
     defaultCheckpoint: String) {
 
-  def this(spark: SparkSession, config: IngestConfig, target: TargetTable) =
-    this(config, new ParquetTarget(spark, target),
-      target.path + "_ckpt")
+  protected def applyBatch(batch: DataFrame): Unit
 
   def run(source: DataFrame): StreamingQuery = runWith(source, None)
   def run(source: DataFrame, trigger: Trigger): StreamingQuery =
@@ -286,8 +282,24 @@ final class UpsertStream(
 
   private def runWith(source: DataFrame, trigger: Option[Trigger]): StreamingQuery =
     Streams.start(source, config, defaultCheckpoint, trigger) {
-      (batch: Dataset[Row], _: Long) => sink.mergeUpsert(batch, config)
+      (batch: Dataset[Row], _: Long) => applyBatch(batch)
     }
+}
+
+/** Single-table latest-wins upsert ingestion (reference §3.1) into any
+  * [[MergeSink]] — bucketed parquet by default, a JDBC database for true
+  * reference parity (`new UpsertStream(cfg, new JdbcSink(jt), ckpt)`;
+  * JDBC sinks have no storage path, so the checkpoint seed is explicit). */
+final class UpsertStream(
+    config: IngestConfig,
+    sink: MergeSink,
+    defaultCheckpoint: String) extends Processor(config, defaultCheckpoint) {
+
+  def this(spark: SparkSession, config: IngestConfig, target: TargetTable) =
+    this(config, new ParquetTarget(spark, target),
+      target.path + "_ckpt")
+
+  protected def applyBatch(batch: DataFrame): Unit = sink.mergeUpsert(batch, config)
 }
 
 /** Single-table delete ingestion; `soft = true` flips the tombstone flag
@@ -297,23 +309,16 @@ final class DeleteStream(
     config: IngestConfig,
     sink: MergeSink,
     defaultCheckpoint: String,
-    soft: Boolean) {
+    soft: Boolean) extends Processor(config, defaultCheckpoint) {
 
   def this(spark: SparkSession, config: IngestConfig, target: TargetTable,
       soft: Boolean = true) =
     this(config, new ParquetTarget(spark, target),
       target.path + "_del_ckpt", soft)
 
-  def run(source: DataFrame): StreamingQuery = runWith(source, None)
-  def run(source: DataFrame, trigger: Trigger): StreamingQuery =
-    runWith(source, Some(trigger))
-
-  private def runWith(source: DataFrame, trigger: Option[Trigger]): StreamingQuery =
-    Streams.start(source, config, defaultCheckpoint, trigger) {
-      (batch: Dataset[Row], _: Long) =>
-        if (soft) sink.mergeSoftDelete(batch, config)
-        else sink.mergeHardDelete(batch, config)
-    }
+  protected def applyBatch(batch: DataFrame): Unit =
+    if (soft) sink.mergeSoftDelete(batch, config)
+    else sink.mergeHardDelete(batch, config)
 }
 
 /** Merge-on-read DELETE stream: each micro-batch's keys mark positions
@@ -327,22 +332,14 @@ final class DeleteStream(
 final class VectoredDeleteStream(
     config: IngestConfig,
     target: ParquetTarget,
-    defaultCheckpoint: String) {
+    defaultCheckpoint: String) extends Processor(config, defaultCheckpoint) {
 
   def this(spark: SparkSession, config: IngestConfig, table: TargetTable) =
     this(config, new ParquetTarget(spark, table),
       table.path + "_vdel_ckpt")
 
-  def run(source: DataFrame): StreamingQuery = runWith(source, None)
-  def run(source: DataFrame, trigger: Trigger): StreamingQuery =
-    runWith(source, Some(trigger))
-
-  private def runWith(
-      source: DataFrame, trigger: Option[Trigger]): StreamingQuery =
-    Streams.start(source, config, defaultCheckpoint, trigger) {
-      (batch: Dataset[Row], _: Long) =>
-        target.deleteVectoredKeys(batch, config)
-    }
+  protected def applyBatch(batch: DataFrame): Unit =
+    target.deleteVectoredKeys(batch, config)
 }
 
 /** Multi-table fan-out (reference §3.3): records carry a routing column.
@@ -363,7 +360,7 @@ final class MultiTableUpsertStream(
     config: IngestConfig,
     sinks: Map[String, MergeSink],
     defaultCheckpoint: String,
-    tableCol: String) {
+    tableCol: String) extends Processor(config, defaultCheckpoint) {
   require(sinks.nonEmpty, "catalog must not be empty")
 
   def this(spark: SparkSession, config: IngestConfig,
@@ -372,15 +369,8 @@ final class MultiTableUpsertStream(
     this(config, Streams.shared(catalog)(_.path)(new ParquetTarget(spark, _)),
       Streams.multiCheckpoint(catalog, "_multi_ckpt"), tableCol)
 
-  def run(source: DataFrame): StreamingQuery = runWith(source, None)
-  def run(source: DataFrame, trigger: Trigger): StreamingQuery =
-    runWith(source, Some(trigger))
-
-  private def runWith(source: DataFrame, trigger: Option[Trigger]): StreamingQuery =
-    Streams.start(source, config, defaultCheckpoint, trigger) {
-      (batch: Dataset[Row], _: Long) =>
-        Streams.fanOut(batch, sinks, tableCol)(_.mergeUpsert(_, config))
-    }
+  protected def applyBatch(batch: DataFrame): Unit =
+    Streams.fanOut(batch, sinks, tableCol)(_.mergeUpsert(_, config))
 }
 
 /** Multi-table delete fan-out. NOTE: the reference has NO public builder
@@ -396,7 +386,7 @@ final class MultiTableDeleteStream(
     sinks: Map[String, MergeSink],
     defaultCheckpoint: String,
     tableCol: String,
-    soft: Boolean) {
+    soft: Boolean) extends Processor(config, defaultCheckpoint) {
   require(sinks.nonEmpty, "catalog must not be empty")
 
   def this(spark: SparkSession, config: IngestConfig,
@@ -406,17 +396,10 @@ final class MultiTableDeleteStream(
     this(config, Streams.shared(catalog)(_.path)(new ParquetTarget(spark, _)),
       Streams.multiCheckpoint(catalog, "_multi_del_ckpt"), tableCol, soft)
 
-  def run(source: DataFrame): StreamingQuery = runWith(source, None)
-  def run(source: DataFrame, trigger: Trigger): StreamingQuery =
-    runWith(source, Some(trigger))
-
-  private def runWith(source: DataFrame, trigger: Option[Trigger]): StreamingQuery =
-    Streams.start(source, config, defaultCheckpoint, trigger) {
-      (batch: Dataset[Row], _: Long) =>
-        Streams.fanOut(batch, sinks, tableCol) { (sink, slice) =>
-          if (soft) sink.mergeSoftDelete(slice, config)
-          else sink.mergeHardDelete(slice, config)
-        }
+  protected def applyBatch(batch: DataFrame): Unit =
+    Streams.fanOut(batch, sinks, tableCol) { (sink, slice) =>
+      if (soft) sink.mergeSoftDelete(slice, config)
+      else sink.mergeHardDelete(slice, config)
     }
 }
 

@@ -1,7 +1,5 @@
 package graft.sink
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -62,26 +60,11 @@ final class BloomIndex(spark: SparkSession, base: ParquetTarget,
 
   private val words = bits / 64
 
-  private val marker = new Path(new Path(path), "_BASE_VERSION")
-  private def fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val marker = new BaseVersionMarker(spark, path)
+  private def fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def wordsFile(v: Long) = new Path(new Path(path), f"words_v$v%010d")
 
-  def syncedBaseVersion: Option[Long] =
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      val s = try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        StandardCharsets.UTF_8).trim
-      finally in.close()
-      Some(s.toLong)
-    }
-
-  private def writeMarker(v: Long): Unit = {
-    val out = fs.create(marker, true)
-    try out.write(v.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  def syncedBaseVersion: Option[Long] = marker.get
 
   /** The base's bucket id of a row — same pmod(murmur3) as the
     * target's own layout (TargetTable pins the bucket count). */
@@ -114,7 +97,7 @@ final class BloomIndex(spark: SparkSession, base: ParquetTarget,
     // the sidecar is KB-scale by construction: one output file
     df.coalesce(1).write.mode("overwrite")
       .parquet(wordsFile(v).toString)
-    writeMarker(v)
+    marker.set(v)
     // GC superseded sidecars (crash before this is harmless orphanage)
     if (fs.exists(new Path(path)))
       fs.listStatus(new Path(path)).foreach { s =>
@@ -184,6 +167,10 @@ final class BloomIndex(spark: SparkSession, base: ParquetTarget,
       }.flatten.toSeq.sorted
   }
 
+  /** Bring the sidecar up to date: bootstrap on first use, else refresh. */
+  private[sink] def sync(): Unit =
+    if (syncedBaseVersion.isEmpty) rebuild() else refresh()
+
   /** Bloom-pruned equality scan: current base rows with
     * `indexedCol = value`, reading only the candidate buckets. The
     * exact predicate re-applies on top (false positives are read then
@@ -202,16 +189,4 @@ final class BloomIndex(spark: SparkSession, base: ParquetTarget,
   * Crash between base commit and refresh replays idempotently from the
   * `_BASE_VERSION` marker, exactly the ValueIndex contract. */
 final class BloomIndexedSink(base: ParquetTarget, bloom: BloomIndex)
-    extends MergeSink {
-  private def sync(): Unit =
-    if (bloom.syncedBaseVersion.isEmpty) bloom.rebuild() else bloom.refresh()
-  def mergeUpsert(batch: DataFrame, config: graft.model.IngestConfig): Unit = {
-    base.mergeUpsert(batch, config); sync()
-  }
-  def mergeSoftDelete(batch: DataFrame, config: graft.model.IngestConfig): Unit = {
-    base.mergeSoftDelete(batch, config); sync()
-  }
-  def mergeHardDelete(batch: DataFrame, config: graft.model.IngestConfig): Unit = {
-    base.mergeHardDelete(batch, config); sync()
-  }
-}
+    extends SyncingSink(base, _ => bloom.sync())

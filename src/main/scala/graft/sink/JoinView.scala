@@ -1,8 +1,5 @@
 package graft.sink
 
-import java.nio.charset.StandardCharsets
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -41,25 +38,9 @@ final class JoinView(spark: SparkSession, base: ParquetTarget,
     buckets = buckets)
   private val vt = new ParquetTarget(spark, table)
 
-  private val marker = new Path(new Path(viewPath), "_BASE_VERSION")
-  private def fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val marker = new BaseVersionMarker(spark, viewPath)
 
-  def syncedBaseVersion: Option[Long] =
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      val s = try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        StandardCharsets.UTF_8).trim
-      finally in.close()
-      Some(s.toLong)
-    }
-
-  private def writeMarker(v: Long): Unit = {
-    val out = fs.create(marker, true)
-    try out.write(v.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  def syncedBaseVersion: Option[Long] = marker.get
 
   /** Full build: enrich the base's whole current state. One base scan. */
   def rebuild(cfg: IngestConfig): Unit = {
@@ -67,7 +48,7 @@ final class JoinView(spark: SparkSession, base: ParquetTarget,
       throw new IllegalStateException(
         s"cannot build view over ${base.table.name}: no committed version"))
     vt.mergeUpsert(enrich(base.read().get), cfg)
-    writeMarker(v)
+    marker.set(v)
   }
 
   /** Incremental refresh from the base's change feed since the last
@@ -94,7 +75,7 @@ final class JoinView(spark: SparkSession, base: ParquetTarget,
         .drop("_change_type"))
       if (!gone.isEmpty) vt.mergeHardDelete(gone, cfg)
       if (!live.isEmpty) vt.mergeUpsert(live, cfg)
-      writeMarker(cur)
+      marker.set(cur)
     } finally org.apache.spark.sql.GraftSql.freeLocalCheckpoint(feed)
   }
 

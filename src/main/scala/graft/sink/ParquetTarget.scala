@@ -2,7 +2,7 @@ package graft.sink
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{Column, DataFrame, GraftSql, Row, SparkSession}
@@ -17,15 +17,19 @@ import graft.model.{IngestConfig, TargetTable}
   * of the whole table (at 100 TB the difference between a sink that works
   * and one that doesn't).
   *
-  * Layout — immutable per-version delta dirs + a manifest that maps each
-  * key-hash bucket to the version dir that last rewrote it:
+  * Layout — immutable per-version delta dirs + a manifest per version that
+  * maps each key-hash bucket to the version dir that last rewrote it and
+  * names everything else the version needs:
   *
   * {{{
   *   table.path/
   *     _LATEST                     <- name of the current manifest file
-  *     m0000000002                 <- manifest: "<bucket>\t<dir>" lines
-  *     z0000000002                 <- zone map: "<bucket>\t<min>\t<max>"
-  *     x0000000002/                <- deletion vector (vectored deletes)
+  *     m0000000003                 <- manifest of version 3:
+  *                                      #buckets=4
+  *                                      #dv=x0000000003   (empty: none)
+  *                                      #zone=3\t1\t2     (bucket, min, max)
+  *                                      3\td0000000002/__graft_bucket=3
+  *     x0000000003/                <- deletion vector of a vectored delete
   *     d0000000001/                <- delta of version 1 (_SUCCESS marker)
   *       __graft_bucket=0/...parquet
   *       __graft_bucket=3/...parquet
@@ -60,27 +64,37 @@ import graft.model.{IngestConfig, TargetTable}
   * written with several (snappy) files per bucket read and merge the same
   * way; the next rewrite of a bucket leaves one file.
   *
-  * One snapshot per operation: every public method resolves the committed
-  * (version, manifest) pair ONCE — one `_LATEST` read, one manifest parse,
-  * one dir-existence pass ([[snapshot]]) — and takes its slice, schema,
-  * zone map and deletion vector from that version; `commit` publishes
-  * the version after the one it was handed. An operation therefore never
-  * pairs one version's manifest with another version's sidecar, and a
-  * merge pays for one resolution, not one per helper.
+  * A version is one manifest: every public method resolves the committed
+  * [[Snapshot]] ONCE — one `_LATEST` read, one manifest parse, one
+  * dir-existence pass ([[snapshot]]) — and takes its slice, schema, zone
+  * bounds and deletion vector from it; `commit` publishes the version
+  * after the one it was handed. No read, lookup or merge lists the root.
+  * A deletion vector keys a row by its file's path inside the table
+  * (`d…/__graft_bucket=N/<file>`, [[dvKey]]), so a copied, moved or
+  * cloned table reads the same rows.
   *
-  * Metadata protocol, each rule in one place: [[readText]] reads a small
-  * metadata file, [[publishFile]] publishes one atomically (tmp file,
-  * stale destination deleted, rename checked), [[listVersioned]] lists the
-  * root's `m`/`z`/`x`/`d` names. [[publishVersion]] is the one path a new
-  * version becomes visible through — zone sidecar, manifest, `_LATEST`
-  * repoint, GC — shared by `commit`, `rollbackTo` and `cloneTo` (which
-  * publishes through a target on the clone root).
+  * Metadata protocol: [[MetaFile]] reads a small metadata file and
+  * publishes one atomically (tmp file, stale destination deleted, rename
+  * checked); [[listVersioned]] lists the root's `m`/`z`/`x`/`d` names for
+  * GC, crash recovery, [[versions]] and manifests written before they
+  * named their vector. [[publishVersion]] is the one path a new version
+  * becomes visible through — manifest, `_LATEST` repoint, GC — shared by
+  * `commit`, `rollbackTo` and `cloneTo` (which publishes through a target
+  * on the clone root). A manifest without a `#dv=` line was written by an
+  * older version of this class: its vector is the newest `x` dir at or
+  * before its version and its zone bounds are in a `z<version>` file
+  * ([[snapshotAt]]).
+  *
+  * Downgrade: the older reader still reads tables this version writes (it
+  * skips `#` lines), but it matches vectors by absolute file URI and finds
+  * them by listing, so rows a vectored delete removed reappear for it.
   *
   * Crash safety (no window loses committed state):
-  *  - crash while writing a delta: no manifest references it; the next
-  *    commit of that version number overwrites the orphan.
+  *  - crash while writing a delta or a vector: no manifest names it; the
+  *    next commit of that version number overwrites the orphan, or GC
+  *    removes it.
   *  - crash between manifest creation and `_LATEST` repoint: recovery
-  *    scans for the highest manifest whose referenced dirs all exist —
+  *    scans for the highest manifest whose named dirs all exist —
   *    the one just written — so the merge survives. Combined with the
   *    checkpointed source and deterministic latest-wins merge, replayed
   *    micro-batches re-merge idempotently (exactly-once state).
@@ -122,8 +136,9 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
   private def nameOf(kind: Char, v: Long): String = f"$kind$v%010d"
   private def pathOf(kind: Char, v: Long): Path = new Path(root, nameOf(kind, v))
 
-  /** (kind, version) of a versioned root entry: `m` manifest, `z` zone
-    * map, `x` deletion vector or `d` delta, plus 10 digits. */
+  /** (kind, version) of a versioned root entry: `m` manifest, `x`
+    * deletion vector, `d` delta or `z` zone bounds (written only before
+    * manifests held them), plus 10 digits. */
   private def parseVersioned(name: String): Option[(Char, Long)] =
     if (name.length == 11 && "mzxd".contains(name.head) && name.drop(1).forall(_.isDigit))
       Some(name.head -> name.drop(1).toLong)
@@ -140,64 +155,54 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
   private def versionsOf(kind: Char): Seq[Long] =
     listVersioned().collect { case (k, v, _) if k == kind => v }
 
-  /** Text of a small metadata file; None when it does not exist. */
-  private def readText(p: Path): Option[String] =
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        StandardCharsets.UTF_8))
-      finally in.close()
-    }
-
-  /** Publish `text` at `p` atomically: write a tmp file, delete a stale
-    * destination, rename. Rename results are checked: on HDFS a rename
-    * onto an existing destination returns false instead of overwriting (a
-    * replayed commit hits this), so the stale destination goes first and
-    * a false return is an error, never silence. */
-  private def publishFile(p: Path, text: String): Unit = {
-    val tmp = new Path(p.getParent, p.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(text.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new IllegalStateException(s"failed to publish $p")
-  }
-
-  /** Parse a manifest into bucket -> relative dir; None unless every
-    * referenced dir exists (an older manifest may reference GC'd dirs).
-    * The `#buckets=` header pins the table's bucket count: opening an
+  /** Version `v`'s snapshot, parsed from its manifest: the `#buckets=`
+    * header, `#dv=` (the deletion vector's dir, relative to the root or
+    * absolute; empty for none), one `#zone=<bucket>\t<min>\t<max>` line
+    * per bucket with version bounds and one `<bucket>\t<dir>` line per
+    * bucket. None unless every dir it names exists (an older manifest may
+    * name GC'd dirs). The header pins the table's bucket count: opening an
     * existing table with a different `TargetTable.buckets` fails loud —
     * silently hashing mod a different count would prune the wrong buckets
-    * and corrupt latest-wins state. */
-  private def readManifest(v: Long): Option[Map[Int, String]] =
-    readText(pathOf('m', v)).flatMap { text =>
+    * and corrupt latest-wins state.
+    *
+    * A manifest without a `#dv=` line was written before manifests named
+    * their vector; for it alone, the vector is the newest `x` dir at or
+    * before `v` (a vector stays authoritative until a newer one
+    * supersedes it) and the zone bounds are read from the `z<v>` file. */
+  private def snapshotAt(v: Long): Option[Snapshot] =
+    MetaFile.read(fs, pathOf('m', v)).flatMap { text =>
       val lines = text.split("\n").toSeq.filter(_.nonEmpty)
-      lines.find(_.startsWith("#buckets=")).foreach { h =>
-        val stored = h.stripPrefix("#buckets=").toInt
-        if (stored != table.buckets)
+      def tagged(tag: String): Seq[String] =
+        lines.filter(_.startsWith(tag)).map(_.stripPrefix(tag))
+      tagged("#buckets=").foreach { h =>
+        if (h.toInt != table.buckets)
           throw new IllegalStateException(
-            s"target ${table.name} was created with $stored buckets but " +
+            s"target ${table.name} was created with $h buckets but " +
               s"TargetTable.buckets is ${table.buckets} — bucket count is " +
               "immutable once written (rebuild the table to change it)")
       }
-      val entries = lines.filterNot(_.startsWith("#")).map { line =>
+      val manifest = lines.filterNot(_.startsWith("#")).map { line =>
         val Array(b, dir) = line.split("\t", 2)
         b.toInt -> dir
       }.toMap
-      if (entries.values.forall(d => fs.exists(new Path(root, d)))) Some(entries)
-      else None
+      val (dv, zoneLines) = tagged("#dv=").headOption match {
+        case Some(d) => (Some(d).filter(_.nonEmpty), tagged("#zone="))
+        case None => (versionsOf('x').filter(_ <= v).maxOption.map(nameOf('x', _)),
+          MetaFile.read(fs, pathOf('z', v)).toSeq.flatMap(_.split("\n")).filter(_.nonEmpty))
+      }
+      val zones = zoneLines.map { line =>
+        val Array(b, mn, mx) = line.split("\t", 3)
+        b.toInt -> (mn.toLong, mx.toLong)
+      }.toMap
+      Some(Snapshot(v, manifest, dv, zones))
+        .filter(s => (s.dirs ++ dv).forall(d => fs.exists(new Path(root, d))))
     }
-
-  private def snapshotAt(v: Long): Option[Snapshot] =
-    readManifest(v).map(Snapshot(v, _))
 
   /** The committed snapshot: the version `_LATEST` names if that manifest
     * is intact, else (crash recovery) the highest intact manifest on disk.
     * The only reader of `_LATEST`; public operations call it once. */
   private def snapshot(): Option[Snapshot] =
-    readText(pointer).flatMap(n => parseVersioned(n.trim))
+    MetaFile.read(fs, pointer).flatMap(n => parseVersioned(n.trim))
       .collect { case ('m', v) => v }.flatMap(snapshotAt)
       .orElse(versionsOf('m').sorted.reverseIterator.flatMap(snapshotAt).nextOption())
 
@@ -278,45 +283,41 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
     reader.parquet(dirs.map(d => new Path(root, d).toString): _*)
   }
 
-  /** The deletion-vector sidecar applicable when reading version `v`:
-    * the newest `x…` sidecar committed at or before `v`. A DV written at
-    * version w stays authoritative for every later version until its
-    * rows are physically materialized away (rewritten buckets get fresh
-    * file paths, so stale DV entries simply stop matching — they can
-    * never delete a row they didn't mark). Versions BEFORE w read the
-    * previous sidecar (or none): time travel sees pre-delete rows. */
-  private def dvVersionFor(v: Long): Option[Long] =
-    versionsOf('x').filter(_ <= v).maxOption
-
-  /** Snapshot read at version `v` with merge-on-read deletion vectors:
-    * the raw multi-dir scan, anti-joined against the applicable DV
-    * sidecar on (file path, in-file row position) — the parquet reader's
+  /** Read `dirs` of snapshot `s` with merge-on-read deletion vectors:
+    * the raw multi-dir scan, anti-joined against the snapshot's vector on
+    * (file key, in-file row position) — from the parquet reader's
     * `_metadata` columns, stable because committed files are immutable.
-    * No sidecar ⇒ exactly the raw scan (no metadata projection, no
-    * join). The DV is usually tiny relative to the table, so AQE picks a
+    * No vector ⇒ exactly the raw scan (no metadata projection, no join).
+    * The vector is usually tiny relative to the table, so AQE picks a
     * broadcast anti-join; schema is unchanged either way. */
-  private def readDirsDv(dirs: Seq[String], v: Long): DataFrame =
-    dvVersionFor(v) match {
-      case None => readDirs(dirs, Some(schemaAt(v, dirs.head)))
-      case Some(_) => readDirsWithMeta(dirs, v).drop(DvFileCol, DvPosCol)
-    }
+  private def readDirsDv(s: Snapshot, dirs: Seq[String]): DataFrame =
+    if (s.dv.isEmpty) readDirs(dirs, Some(schemaAt(s.version, dirs.head)))
+    else readDirsWithMeta(s, dirs).drop(DvFileCol, DvPosCol)
 
-  /** Read a DV sidecar down to its (file path, row position) contract,
-    * optionally PRUNING to the named buckets: the sidecar is written
-    * partitioned by the bucket parsed from each marked file's path, so
-    * a bucket-scoped read scans only the matching sidecar shards
-    * (partition pruning on [[DvBucketCol]]) — a reader of one bucket
-    * never pays for a corpus-wide delete's full position set. */
-  private def readDv(x: Long, buckets: Option[Seq[Int]] = None): DataFrame = {
+  /** The key a deletion vector stores for a data file: its path inside the
+    * table, `d<10 digits>/__graft_bucket=N/<file>` — the same wherever the
+    * table is copied, moved or cloned to. Applied to the scanned file path
+    * and to every stored entry, so entries older vectors stored as
+    * absolute URIs match too. */
+  private def dvKey(path: Column): Column =
+    regexp_extract(path, s"(d\\d{10}/$BucketCol=\\d+/[^/]+)$$", 1)
+
+  /** Read deletion vector `dv` down to its (file key, row position)
+    * contract, optionally PRUNING to the named buckets: a vector is
+    * written partitioned by the bucket of each marked file, so a
+    * bucket-scoped read scans only the matching shards (partition pruning
+    * on [[DvBucketCol]]) — a reader of one bucket never pays for a
+    * corpus-wide delete's full position set. */
+  private def readDv(dv: String, buckets: Option[Seq[Int]] = None): DataFrame = {
     // the known schema skips the inference job; partition discovery still
-    // adds the shard column when the sidecar is sharded
-    val dv = spark.read.schema(dvSchema).parquet(pathOf('x', x).toString)
+    // adds the shard column when the vector is sharded
+    val marks = spark.read.schema(dvSchema).parquet(new Path(root, dv).toString)
     val pruned = buckets match {
-      case Some(bs) if dv.columns.contains(DvBucketCol) =>
-        dv.filter(col(DvBucketCol).isin(bs: _*))
-      case _ => dv
+      case Some(bs) if marks.columns.contains(DvBucketCol) =>
+        marks.filter(col(DvBucketCol).isin(bs: _*))
+      case _ => marks
     }
-    pruned.select(col(DvFileCol), col(DvPosCol))
+    pruned.select(dvKey(col(DvFileCol)).as(DvFileCol), col(DvPosCol))
   }
 
   /** Bucket ids named by a set of manifest dir entries
@@ -326,29 +327,27 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
       .filter(_.startsWith(s"$BucketCol="))
       .map(_.stripPrefix(s"$BucketCol=").toInt)).distinct
 
-  /** Like [[readDirsDv]] but KEEPING the (file path, row position)
+  /** Like [[readDirsDv]] but KEEPING the (file key, row position)
     * metadata columns — for callers that need provenance past the DV
     * anti-join (`input_file_name()` cannot cross a multi-source plan). */
-  private def readDirsWithMeta(dirs: Seq[String], v: Long): DataFrame = {
-    val base = readDirs(dirs, Some(schemaAt(v, dirs.head)))
-      .select(col("*"), col("_metadata.file_path").as(DvFileCol),
+  private def readDirsWithMeta(s: Snapshot, dirs: Seq[String]): DataFrame = {
+    val base = readDirs(dirs, Some(schemaAt(s.version, dirs.head)))
+      .select(col("*"), dvKey(col("_metadata.file_path")).as(DvFileCol),
         col("_metadata.row_index").as(DvPosCol))
-    dvVersionFor(v) match {
-      case None => base
-      case Some(x) =>
-        val ids = bucketIdsOfDirs(dirs)
-        val dv = readDv(x, if (ids.nonEmpty) Some(ids) else None)
-        base.join(dv, Seq(DvFileCol, DvPosCol), "left_anti")
+    s.dv.fold(base) { dv =>
+      val ids = bucketIdsOfDirs(dirs)
+      base.join(readDv(dv, if (ids.nonEmpty) Some(ids) else None),
+        Seq(DvFileCol, DvPosCol), "left_anti")
     }
   }
 
   def read(): Option[DataFrame] =
-    nonEmptySnapshot().map(s => readDirsDv(s.dirs, s.version))
+    nonEmptySnapshot().map(s => readDirsDv(s, s.dirs))
 
   /** Time travel: the snapshot a specific committed version published;
     * None once GC'd past `TargetTable.retainVersions` (or never existed). */
   def readVersion(v: Long): Option[DataFrame] =
-    snapshotAt(v).filter(_.manifest.nonEmpty).map(s => readDirsDv(s.dirs, v))
+    snapshotAt(v).filter(_.manifest.nonEmpty).map(s => readDirsDv(s, s.dirs))
 
   /** Change data feed between two committed versions (CDC): the keyed
     * diff from → to, one row per inserted, updated, or deleted key with
@@ -379,35 +378,32 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
       updatePreimages: Boolean = false): Option[DataFrame] = {
     require(fromVersion < toVersion,
       s"readChanges needs fromVersion < toVersion, got $fromVersion >= $toVersion")
-    for { mo <- readManifest(fromVersion); mn <- readManifest(toVersion) }
+    for { so <- snapshotAt(fromVersion); sn <- snapshotAt(toVersion) }
     yield {
+      val (mo, mn) = (so.manifest, sn.manifest)
       val changed = (mo.keySet ++ mn.keySet).toSeq.sorted
         .filter(b => mo.get(b) != mn.get(b))
       // A vectored delete changes NO bucket dirs — its changes hide in
-      // the deletion-vector delta. Map the delta's file paths back to
+      // the deletion-vector delta. Map the delta's file keys back to
       // their bucket dirs and diff those too (still O(changes), the DV
       // names exactly the touched files). The delta runs both ways:
       // positions marked only at `toVersion` were deleted, positions
       // marked only at `fromVersion` were restored (a rollback past a
       // vectored delete).
-      val dvHitDirs: Seq[String] = {
-        val dvFrom = dvVersionFor(fromVersion)
-        val dvTo = dvVersionFor(toVersion)
-        if (dvFrom == dvTo) Nil
+      val dvHitDirs: Seq[String] =
+        if (so.dv == sn.dv) Nil
         else {
-          val marks = (x: Option[Long]) => x.fold(emptyWithSchema(dvSchema))(readDv(_))
-          val (oldDv, newDv) = (marks(dvFrom), marks(dvTo))
+          val marks = (s: Snapshot) => s.dv.fold(emptyWithSchema(dvSchema))(readDv(_))
+          val (oldDv, newDv) = (marks(so), marks(sn))
           val delta = newDv.except(oldDv).union(oldDv.except(newDv))
-          val dirByQualified = (mo.values ++ mn.values).toSeq.distinct
-            .map(d => fs.makeQualified(new Path(root, d)).toString -> d)
-            .toMap
+          // a file key is `<delta>/__graft_bucket=N/<file>`; a manifest dir,
+          // relative or absolute, ends with `<delta>/__graft_bucket=N`
+          val dirByKey = (mo.values ++ mn.values).toSeq.distinct
+            .map(d => d.split('/').takeRight(2).mkString("/") -> d).toMap
           withOpTag("changes", toVersion)(delta.select(col(DvFileCol)).distinct().collect())
-            .map(_.getString(0))
-            .flatMap(f => dirByQualified.get(
-              fs.makeQualified(new Path(f).getParent).toString))
+            .flatMap(r => dirByKey.get(r.getString(0).split('/').take(2).mkString("/")))
             .distinct.toSeq
         }
-      }
       val oldDirs =
         (changed.flatMap(mo.get) ++ dvHitDirs.filter(mo.values.toSet)).distinct
       val newDirs =
@@ -422,18 +418,16 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
         // applies ITS version's deletion vector, so a vectored delete
         // between the two versions surfaces as `delete` change rows
         val oldFrame =
-          if (oldDirs.nonEmpty) Some(readDirsDv(oldDirs, fromVersion)) else None
+          if (oldDirs.nonEmpty) Some(readDirsDv(so, oldDirs)) else None
         val newFrame =
-          if (newDirs.nonEmpty) Some(readDirsDv(newDirs, toVersion)) else None
+          if (newDirs.nonEmpty) Some(readDirsDv(sn, newDirs)) else None
         // No changed buckets: empty feed. The schema must come from the
         // FEED's own versions (prefer toVersion; fall back to fromVersion
         // when the table was empty at toVersion) — routing through the
         // CURRENT version here either poisoned the schema cache across a
         // migration or stamped the feed with a later schema (r13 advice).
         val schema = newFrame.orElse(oldFrame).map(_.schema)
-          .getOrElse(
-            if (mn.nonEmpty) schemaOf(Snapshot(toVersion, mn))
-            else schemaOf(Snapshot(fromVersion, mo)))
+          .getOrElse(schemaOf(if (mn.nonEmpty) sn else so))
         for { of <- oldFrame; _ <- newFrame } require(of.schema == schema,
           s"readChanges across a schema migration is unsupported: version " +
             s"$fromVersion schema ${of.schema} != version $toVersion schema $schema")
@@ -482,7 +476,7 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
   def readBuckets(bucketIds: Seq[Int]): Option[DataFrame] =
     nonEmptySnapshot().map { s =>
       val dirs = bucketIds.distinct.flatMap(s.manifest.get).distinct
-      if (dirs.isEmpty) emptyWithSchema(schemaOf(s)) else readDirsDv(dirs, s.version)
+      if (dirs.isEmpty) emptyWithSchema(schemaOf(s)) else readDirsDv(s, dirs)
     }
 
   /** Equality lookup by the BUCKET columns alone
@@ -519,38 +513,29 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
         else struct(cols.map(col): _*).isin(keys.map(k =>
           struct(cols.zip(k.toSeq).map { case (c, v) => value(c, v) }: _*)): _*)
       if (dirs.isEmpty) emptyWithSchema(schema)
-      else readDirsDv(dirs, s.version).where(in)
+      else readDirsDv(s, dirs).where(in)
     }
 
   /** Intact (readable) committed versions, ascending — at most
     * `retainVersions` of them after any commit's GC. */
   def versions(): Seq[Long] =
-    versionsOf('m').filter(readManifest(_).isDefined).sorted
+    versionsOf('m').filter(snapshotAt(_).isDefined).sorted
 
-  /** Per-bucket zone maps (min/max of the version column) of a committed
-    * version — the data-skipping sidecar `commit` maintains for integral
-    * version columns. A bucket ABSENT from the map has unknown bounds
-    * (legacy table, non-integral version column) and must always be
-    * read; presence is therefore purely an optimization, never a
-    * correctness input. Empty map when no sidecar exists. */
+  /** Per-bucket zone maps (min/max of the version column) of the
+    * committed version — the data-skipping bounds `commit` records in the
+    * manifest for integral version columns. A bucket ABSENT from the map
+    * has unknown bounds (non-integral version column, no statistics) and
+    * must always be read; presence is therefore purely an optimization,
+    * never a correctness input. */
   def zoneMaps(): Map[Int, (Long, Long)] =
-    snapshot().flatMap(s => readZones(s.version)).getOrElse(Map.empty)
-
-  /** Version `v`'s zone-map sidecar; None when it has none. */
-  private def readZones(v: Long): Option[Map[Int, (Long, Long)]] =
-    readText(pathOf('z', v)).map(_.split("\n").toSeq.filter(_.nonEmpty).map { line =>
-      val Array(b, mn, mx) = line.split("\t", 3)
-      b.toInt -> (mn.toLong, mx.toLong)
-    }.toMap)
+    snapshot().map(_.zones).getOrElse(Map.empty)
 
   /** Buckets of `s` whose recorded version bounds intersect [lo, hi];
     * buckets without bounds are always chosen. */
-  private def bucketsInRange(s: Snapshot, lo: Long, hi: Long): Map[Int, String] = {
-    val zones = readZones(s.version).getOrElse(Map.empty)
+  private def bucketsInRange(s: Snapshot, lo: Long, hi: Long): Map[Int, String] =
     s.manifest.filter { case (b, _) =>
-      zones.get(b).forall { case (mn, mx) => mx >= lo && mn <= hi }
+      s.zones.get(b).forall { case (mn, mx) => mx >= lo && mn <= hi }
     }
-  }
 
   /** Zone-map-pruned range scan: rows of the current snapshot whose
     * version column lies in [lo, hi], reading ONLY the buckets whose
@@ -564,7 +549,7 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
     * no file is opened for a skipped bucket. On a hash-bucketed merge
     * target the high-value query is the INCREMENTAL-SYNC read,
     * "rows with version ≥ last_sync": a bucket not rewritten since
-    * last_sync carries its old sidecar bounds (max < last_sync) and is
+    * last_sync carries its old bounds (max < last_sync) and is
     * skipped, so the scan cost tracks how many buckets recent commits
     * actually touched — on a 10k-bucket table fed narrow micro-batches,
     * a handful — not the table. A full-history window degrades
@@ -576,7 +561,7 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
       val chosen = bucketsInRange(s, lo, hi)
       val vc = col(table.versionCol).cast("long")
       if (chosen.isEmpty) emptyWithSchema(schemaOf(s))
-      else readDirsDv(chosen.values.toSeq.distinct, s.version)
+      else readDirsDv(s, chosen.values.toSeq.distinct)
         .filter(vc >= lo && vc <= hi)
     }
 
@@ -595,7 +580,7 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
   def stats(): Option[DataFrame] =
     nonEmptySnapshot().map { s =>
       import spark.implicits._
-      val counts = readDirsWithMeta(s.dirs, s.version)
+      val counts = readDirsWithMeta(s, s.dirs)
         .groupBy(regexp_extract(col(DvFileCol), s"$BucketCol=(\\d+)", 1)
           .cast("int").as("bucket"))
         .agg(count(lit(1)).as("n_rows"))
@@ -625,7 +610,7 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
     // vectored deletes — the rewritten files carry no deleted rows and
     // the old DV entries dangle harmlessly against the retired paths
     if (s.manifest.nonEmpty) {
-      val cur = readDirsDv(s.dirs, s.version)
+      val cur = readDirsDv(s, s.dirs)
       val placed = Merge.place(table, cur, config.maxWriterPartitions, s.manifest.keySet)
       commit(s, Some(placed.sortWithinPartitions(col(BucketCol) +: clusterBy(cur): _*)),
         Map.empty)
@@ -659,8 +644,8 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
   }
 
   /** Zero-copy snapshot clone (branch): publish a manifest at `destRoot`
-    * whose bucket entries reference THIS target's committed dirs by
-    * ABSOLUTE path — no data bytes move, the clone commits in O(buckets)
+    * that names THIS target's committed dirs and deletion vector by
+    * ABSOLUTE path, with the same zone bounds — no data bytes move, the clone commits in O(buckets)
     * metadata regardless of table size (the Delta SHALLOW CLONE /
     * Iceberg branch semantic). The clone is a full first-class target:
     * reads serve the shared files; subsequent merges COPY-ON-WRITE —
@@ -669,9 +654,9 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
     *
     * Caveat (inherent to shallow clones): the source's GC does not know
     * about clone references, so compaction/retention on the SOURCE can
-    * delete dirs a clone still points at — clone from sources whose
-    * retention outlives the branch, or compact only the clone.
-    * `readManifest`'s existence validation turns a violated clone into
+    * delete dirs or vectors a clone still points at — clone from sources
+    * whose retention outlives the branch, or compact only the clone.
+    * `snapshotAt`'s existence validation turns a violated clone into
     * "no intact version" (loud), never silently partial data. */
   def cloneTo(destRoot: String): Unit = {
     val s = snapshot().getOrElse(throw new IllegalStateException(
@@ -680,17 +665,9 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
     if (dest.fs.exists(dest.pointer))
       throw new IllegalStateException(
         s"clone destination $destRoot already has a committed table")
-    // The clone references the same immutable files, so the source's
-    // deletion-vector marks stay valid for it: copied (tiny), not
-    // referenced — the source may GC its sidecar on its own schedule.
-    dvVersionFor(s.version).foreach { x =>
-      FileUtil.copy(fs, pathOf('x', x), dest.fs, dest.pathOf('x', 1L), false,
-        spark.sparkContext.hadoopConfiguration)
-    }
-    // Same files, so the source's zone bounds stay valid for the clone too.
-    dest.publishVersion(1L,
-      s.manifest.map { case (b, d) => b -> new Path(root, d).toString },
-      readZones(s.version))
+    dest.publishVersion(s.copy(version = 1L,
+      manifest = s.manifest.map { case (b, d) => b -> new Path(root, d).toString },
+      dv = s.dv.map(new Path(root, _).toString)))
   }
 
   /** Row-level retention delete (TTL / compliance erasure): drop every
@@ -708,13 +685,13 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
   def deleteWhere(config: IngestConfig, pred: Column): Unit =
     mutate("delete_where") { s =>
       if (s.manifest.nonEmpty) {
-        val cur = readDirsDv(s.dirs, s.version)
+        val cur = readDirsDv(s, s.dirs)
         val matched = cur.filter(coalesce(pred, lit(false)))
         val hitB = Merge.distinctInts(
           matched.select(Merge.bucketOf(table, matched).as(BucketCol)), BucketCol)
         if (hitB.nonEmpty) {
           val hitDirs = s.manifest.filter { case (b, _) => hitB(b) }
-          val keep = readDirsDv(hitDirs.values.toSeq.distinct, s.version)
+          val keep = readDirsDv(s, hitDirs.values.toSeq.distinct)
             .filter(!coalesce(pred, lit(false)))
           commit(s, Some(Merge.place(table, keep, config.maxWriterPartitions, hitB)),
             s.manifest -- hitB)
@@ -724,23 +701,23 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
 
   /** Merge-on-read delete (DELETION VECTORS): mark every current row
     * matching `pred` deleted by POSITION — (immutable file path, in-file
-    * row index) pairs in a parquet sidecar — and commit a new version
+    * row index) pairs in a parquet deletion vector — and commit a new version
     * whose manifest carries every bucket dir unchanged. NOTHING is
-    * rewritten: the commit cost is the predicate scan plus a sidecar of
+    * rewritten: the commit cost is the predicate scan plus a vector of
     * the matched positions, however many terabytes the matched buckets
     * hold — the Delta/Iceberg deletion-vector contract, and the right
     * half of the write-amplification trade against [[deleteWhere]]
     * (copy-on-write: pay the rewrite now, reads stay raw scans).
-    * Every read path applies the sidecar as an anti-join (merge-on-read,
+    * Every read path applies the vector as an anti-join (merge-on-read,
     * see [[readDirsDv]]); [[compact]] materializes it away. Repeated
-    * vectored deletes fold into one cumulative sidecar. Time travel to a
+    * vectored deletes fold into one cumulative vector. Time travel to a
     * pre-delete version still serves the deleted rows (its applicable
-    * sidecar predates this one). A NULL predicate result KEEPS the row,
+    * manifest names the older vector). A NULL predicate result KEEPS the row,
     * exactly like [[deleteWhere]]; no matches ⇒ no commit. */
   def deleteVectored(config: IngestConfig, pred: Column): Unit =
     mutate("delete_vectored") { s =>
       if (s.manifest.nonEmpty)
-        commitDv(s, readDirsWithMeta(s.dirs, s.version)
+        commitDv(s, readDirsWithMeta(s, s.dirs)
           .filter(coalesce(pred, lit(false))))
     }
 
@@ -758,20 +735,20 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
         val dirs = Merge.distinctInts(k.select(Merge.bucketOf(table, k).as(BucketCol)),
           BucketCol).toSeq.flatMap(s.manifest.get).distinct
         if (dirs.nonEmpty)
-          commitDv(s, readDirsWithMeta(dirs, s.version)
+          commitDv(s, readDirsWithMeta(s, dirs)
             .join(broadcast(k), table.keyCols, "left_semi"))
       }
     }
 
   /** Fold the positions of `hits` (rows read with their metadata
-    * columns) into the snapshot's applicable deletion vector and commit
+    * columns) into the snapshot's deletion vector and commit
     * it as a new version carrying every bucket dir unchanged. No hits ⇒
     * no commit. */
   private def commitDv(s: Snapshot, hits: DataFrame): Unit = {
     val matched = hits.select(col(DvFileCol), col(DvPosCol)).persist()
     try {
       if (matched.limit(1).count() > 0) {
-        val merged = dvVersionFor(s.version).map(readDv(_))
+        val merged = s.dv.map(readDv(_))
           .map(_.unionByName(matched)).getOrElse(matched).distinct()
         commit(s, None, s.manifest, dvOverride = Some(merged))
       }
@@ -812,7 +789,7 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
     try {
       val stored = if (s.manifest.isEmpty) None else Some(schemaOf(s))
       Merge.rewrite(table, change, cached, stored, s.manifest.keySet,
-        bs => readDirsDv(bs.flatMap(s.manifest.get).distinct, s.version),
+        bs => readDirsDv(s, bs.flatMap(s.manifest.get).distinct),
         config.maxWriterPartitions)
         .foreach(r => commit(s, Some(r.rows), s.manifest -- r.buckets))
     } finally { cached.unpersist(); () }
@@ -944,7 +921,7 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
   def migrate(config: IngestConfig)(transform: DataFrame => DataFrame): Unit =
     mutate("migrate") { s =>
       if (s.manifest.nonEmpty) {
-        val out = transform(readDirsDv(s.dirs, s.version))
+        val out = transform(readDirsDv(s, s.dirs))
         val missing =
           (table.keyCols ++ table.orderingCols).diff(out.columns.toSeq)
         require(missing.isEmpty,
@@ -959,15 +936,15 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
     * ([[Merge.place]], [[Merge.rewrite]]) — under the delta dir of the
     * version after `base`, ONE zstd file per bucket, then publish
     * (carried-over ++ written) buckets as that version. None writes no
-    * delta (a vectored delete commits only its sidecar). The data fully
-    * materializes before any existing state is referenced or touched (we
-    * may be reading dirs we're superseding). Callers hold the `_LOCK`
-    * lease (every public mutator runs through [[mutate]]) and pass the
-    * snapshot they resolved under it. */
+    * delta; `dvOverride` (a vectored delete) writes the version's
+    * deletion vector, and every other commit names its base's. The data
+    * fully materializes before any existing state is referenced or
+    * touched (we may be reading dirs we're superseding). Callers hold the
+    * `_LOCK` lease (every public mutator runs through [[mutate]]) and pass
+    * the snapshot they resolved under it. */
   private def commit(
       base: Snapshot, placed: Option[DataFrame], carryOver: Map[Int, String],
       dvOverride: Option[DataFrame] = None): Unit = {
-    purgeOrphanDvs(base.version)
     val next = base.version + 1L
     val delta = nameOf('d', next)
     val deltaPath = new Path(root, delta)
@@ -987,44 +964,39 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
       cacheSchema(next, GraftSql.parquetSchema(spark, f, meta))
     }
 
-    // Zone-map sidecar (per-bucket min/max of the version column, for
+    // Zone bounds (per-bucket min/max of the version column, for
     // data-skipping range reads): bounds of the written buckets come from
-    // their files' footer statistics, the base version's bounds carry over
-    // for carried-over buckets (their files did not change). A bucket
-    // without statistics gets no bound. A MISSING sidecar only disables
-    // pruning, never correctness. Non-integral version columns get no
-    // sidecar (no pruning).
+    // their files' footer statistics, the base's bounds carry over for
+    // carried-over buckets (their files did not change). A bucket without
+    // statistics gets no bound, which only disables its pruning.
+    // Non-integral version columns get no bounds.
     val zones = placed match {
-      case None => readZones(base.version)
-      case Some(p) => p.schema.find(_.name == table.versionCol)
-        .filter(_.dataType match {
+      case None => base.zones
+      case Some(p) if p.schema.find(_.name == table.versionCol).exists(_.dataType match {
           case LongType | IntegerType | ShortType | ByteType => true
           case _ => false
-        })
-        .map { _ =>
-          readZones(base.version).getOrElse(Map.empty)
-            .filter { case (b, _) => carryOver.contains(b) } ++
-            footers.flatMap { case (b, files) => versionBounds(files.map(_._2)).map(b -> _) }
-        }
+        }) =>
+        base.zones.filter { case (b, _) => carryOver.contains(b) } ++
+          footers.flatMap { case (b, files) => versionBounds(files.map(_._2)).map(b -> _) }
+      case Some(_) => Map.empty[Int, (Long, Long)]
     }
 
-    // Deletion-vector sidecar (only a vectored delete writes one; normal
-    // commits leave the previous sidecar authoritative via the
-    // latest-at-or-before-version rule). Written before the pointer
-    // repoint: an orphan from a crash is purged at the next commit.
+    // Deletion vector, written before the manifest that names it (an
+    // orphan from a crash is named by no manifest, and GC removes it).
     // SHARDED by the bucket each marked file belongs to (parsed from its
-    // path) so a corpus-wide predicate delete fans out across writer
+    // key) so a corpus-wide predicate delete fans out across writer
     // tasks instead of funnelling one coalesced task, and bucket-scoped
-    // readers partition-prune the sidecar to their shards ([[readDv]]).
-    dvOverride.foreach { dv =>
-      dv.withColumn(DvBucketCol,
+    // readers partition-prune the vector to their shards ([[readDv]]).
+    val dv = dvOverride.map { marks =>
+      marks.withColumn(DvBucketCol,
           regexp_extract(col(DvFileCol), s"$BucketCol=(\\d+)", 1)
             .cast("int"))
         .repartition(col(DvBucketCol))
         .write.partitionBy(DvBucketCol).mode("overwrite")
         .parquet(pathOf('x', next).toString)
-    }
-    publishVersion(next, carryOver ++ written, zones)
+      nameOf('x', next)
+    }.orElse(base.dv)
+    publishVersion(Snapshot(next, carryOver ++ written, dv, zones))
   }
 
   /** [min, max] of the version column over every row group of `files`,
@@ -1040,43 +1012,32 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
       values.map(_.genericGetMax.asInstanceOf[Number].longValue).max))
   }
 
-  /** Make version `next` current: zone sidecar (when given), manifest,
-    * `_LATEST` repoint, then GC. The only writer of manifests and of
-    * `_LATEST`. Sidecars land before the manifest, so an orphan from a
+  /** Make snapshot `s` current: its manifest, the `_LATEST` repoint,
+    * then GC. The only writer of manifests and of `_LATEST`. A deletion
+    * vector lands before the manifest that names it, so an orphan from a
     * crashed publish is unreachable. Crash between manifest and repoint:
     * the intact pointer still names the previous version, the replayed
-    * micro-batch re-merges idempotently onto it and republishes `next`
-    * over this orphan; pointer lost too: recovery scans to the highest
-    * intact manifest — this one. GC then drops manifests older than the
-    * retention window and bucket dirs no RETAINED manifest references
-    * (readers resolved against any retained version keep their files;
-    * retainVersions = 1 keeps only `next`). */
-  private def publishVersion(next: Long, entries: Map[Int, String],
-      zones: Option[Map[Int, (Long, Long)]]): Unit = {
-    zones.foreach(z => publishFile(pathOf('z', next), z.toSeq.sortBy(_._1)
-      .map { case (b, (mn, mx)) => s"$b\t$mn\t$mx" }.mkString("\n")))
-    publishFile(pathOf('m', next), (s"#buckets=${table.buckets}" +:
-      entries.toSeq.sortBy(_._1).map { case (b, d) => s"$b\t$d" }).mkString("\n"))
-    publishFile(pointer, nameOf('m', next))
-    gcRetained(next, entries, table.retainVersions)
+    * micro-batch re-merges idempotently onto it and republishes this
+    * version over the orphan; pointer lost too: recovery scans to the
+    * highest intact manifest — this one. GC then drops manifests older
+    * than the retention window and bucket dirs and vectors no RETAINED
+    * manifest names (readers resolved against any retained version keep
+    * their files; retainVersions = 1 keeps only `s`). */
+  private def publishVersion(s: Snapshot): Unit = {
+    val lines = Seq(s"#buckets=${table.buckets}", s"#dv=${s.dv.getOrElse("")}") ++
+      s.zones.toSeq.sortBy(_._1).map { case (b, (mn, mx)) => s"#zone=$b\t$mn\t$mx" } ++
+      s.manifest.toSeq.sortBy(_._1).map { case (b, d) => s"$b\t$d" }
+    MetaFile.publish(fs, pathOf('m', s.version), lines.mkString("\n"))
+    MetaFile.publish(fs, pointer, nameOf('m', s.version))
+    gcRetained(s, table.retainVersions)
   }
-
-  /** Delete deletion-vector sidecars above committed version `cur` —
-    * orphans of a crashed vectored delete (sidecar written, manifest
-    * never published) that would otherwise silently activate for the
-    * next version. */
-  private def purgeOrphanDvs(cur: Long): Unit =
-    listVersioned().foreach { case (k, x, p) =>
-      if (k == 'x' && x > cur) fs.delete(p, true)
-    }
 
   /** Explicit snapshot expiry — the on-demand VACUUM twin of the
     * per-commit GC (Iceberg `expire_snapshots` / Delta `VACUUM`):
     * shrink the LIVE retention window to `keep` versions without
     * writing any data. Same rules as commit-time GC — a bucket dir
-    * survives iff some retained manifest still references it, the
-    * newest at-or-below-window deletion-vector sidecar stays
-    * authoritative for the window floor — so a crash mid-expiry leaves
+    * or deletion vector survives iff some retained manifest still names
+    * it — so a crash mid-expiry leaves
     * a superset of the retained state (idempotent; rerun to finish).
     * Time travel to an expired version returns None afterwards; every
     * retained version stays byte-identical. No-op (0 removed) when the
@@ -1085,70 +1046,37 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable)
   def expireSnapshots(keep: Int): (Long, Long) = {
     require(keep >= 1, s"keep must be >= 1, got $keep")
     val before = versions().size.toLong
-    snapshot().foreach(s => gcRetained(s.version, s.manifest, keep))
+    snapshot().foreach(gcRetained(_, keep))
     (before, versions().size.toLong)
   }
 
   /** Metadata-only ROLLBACK (Iceberg `rollback_to_snapshot`): republish
-    * version `v`'s manifest as a NEW commit. No data file is rewritten
-    * or deleted — the bad commits stay in history for audit until GC
-    * ages them out — and the new current state is bit-identical to
-    * `readVersion(v)`. Sidecars are re-pinned alongside the manifest:
-    * the zone map is republished from z_v (same entries ⇒ same bounds;
-    * a GC'd z_v just disables pruning, never correctness), and the
-    * deletion-vector state applicable AT v is copied to the new
-    * version — or, when v predates every vector, an explicit EMPTY
-    * sidecar is published so vectors from the rolled-back-over commits
-    * cannot leak into the restored state (the at-or-before resolution
-    * rule would otherwise pick them up). O(metadata) cost: one manifest
-    * + sidecar copies, zero data IO — the property that makes rollback
+    * version `v`'s snapshot — bucket dirs, deletion vector and zone bounds
+    * — as a NEW commit. No data file is rewritten or deleted — the bad
+    * commits stay in history for audit until GC ages them out — and the
+    * new current state is bit-identical to `readVersion(v)`. O(metadata)
+    * cost: one manifest, zero data IO — the property that makes rollback
     * instant at 100 TB. */
   def rollbackTo(v: Long): Unit = mutate("rollback") { s =>
     if (s.version == 0L) throw new IllegalStateException("rollback on an empty target")
-    val cur = s.version
-    require(v >= 1 && v <= cur, s"version $v out of range 1..$cur")
-    val restored = readManifest(v)
+    require(v >= 1 && v <= s.version, s"version $v out of range 1..${s.version}")
+    val restored = snapshotAt(v)
     require(restored.isDefined,
       s"version $v is expired or references GC'd files — cannot roll back")
-    purgeOrphanDvs(cur)
-    val next = cur + 1L
-    dvVersionFor(v) match {
-      case Some(x) =>
-        FileUtil.copy(fs, pathOf('x', x), fs, pathOf('x', next), false,
-          spark.sparkContext.hadoopConfiguration)
-      case None if versionsOf('x').nonEmpty =>
-        // one empty parquet part WITH a footer (repartition(1) forces
-        // a task) so the at-or-before DV resolution lands here and
-        // reads an empty vector, masking the rolled-back-over ones
-        spark.createDataFrame(java.util.Collections.emptyList[Row](), dvSchema)
-          .repartition(1)
-          .write.mode("overwrite")
-          .parquet(pathOf('x', next).toString)
-      case None =>
-    }
-    publishVersion(next, restored.get, readZones(v))
+    publishVersion(restored.get.copy(version = s.version + 1L))
   }
 
-  /** Shared GC kernel: retain `retain` versions ending at `newest`
-    * (whose manifest entries are `newestEntries`); delete every older
-    * manifest/zone sidecar, every bucket dir no retained manifest
-    * references, and every deletion-vector sidecar superseded at the
-    * window floor. */
-  private def gcRetained(
-      newest: Long, newestEntries: Map[Int, String], retain: Int): Unit = {
-    val oldestKept = newest - retain + 1
-    val referenced = newestEntries.values.toSet ++
-      (oldestKept until newest).flatMap(readManifest(_)).flatMap(_.values)
-    val listed = listVersioned()
-    // Deletion-vector sidecars outlive the manifest retention window: a
-    // sidecar below the window is still THE applicable vector for every
-    // retained version until a newer one supersedes it, so only sidecars
-    // strictly older than the newest at-or-below-window one are dead.
-    val dvKeepFloor = listed.collect { case ('x', x, _) if x <= oldestKept => x }
-      .maxOption.getOrElse(Long.MinValue)
-    listed.foreach {
+  /** Shared GC kernel: retain `retain` versions ending at `newest`;
+    * delete every older manifest (and `z` file of a manifest written
+    * before manifests held zone bounds), and every bucket dir and
+    * deletion vector no retained manifest names. */
+  private def gcRetained(newest: Snapshot, retain: Int): Unit = {
+    val oldestKept = newest.version - retain + 1
+    val referenced = (newest +: (oldestKept until newest.version).flatMap(snapshotAt))
+      .flatMap(k => k.dirs ++ k.dv).toSet
+    listVersioned().foreach {
       case ('m' | 'z', v, path) if v < oldestKept => fs.delete(path, false)
-      case ('x', x, path) if x < dvKeepFloor => fs.delete(path, true)
+      case ('x', _, path) if !referenced(path.getName) => fs.delete(path, true)
       case ('d', _, path) =>
         val n = path.getName
         fs.listStatus(path).toSeq.map(_.getPath)
@@ -1177,9 +1105,12 @@ object ParquetTarget {
     * the same write and point-read time. */
   private val Codec = "zstd"
 
-  /** One committed version and its manifest (bucket -> dir). Version 0
+  /** One committed version, as its manifest names it: bucket -> dir, the
+    * deletion vector's dir (relative to the root or absolute) if any, and
+    * the version-column bounds of the buckets that have them. Version 0
     * with no entries stands for "nothing committed yet". */
-  private final case class Snapshot(version: Long, manifest: Map[Int, String]) {
+  private final case class Snapshot(version: Long, manifest: Map[Int, String],
+      dv: Option[String] = None, zones: Map[Int, (Long, Long)] = Map.empty) {
     def dirs: Seq[String] = manifest.values.toSeq.distinct
   }
 }

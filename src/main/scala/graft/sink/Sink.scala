@@ -20,3 +20,22 @@ trait MergeSink {
   /** Physical row removal. */
   def mergeHardDelete(batch: DataFrame, config: IngestConfig): Unit
 }
+
+/** A [[MergeSink]] that applies each micro-batch to `base`, then brings a
+  * target derived from it up to date with `sync` (see
+  * [[IndexedParquetSink]], [[BloomIndexedSink]]), so a streaming ingest
+  * leaves the state table AND the derived target current at every
+  * committed batch. A crash between the two replays idempotently from the
+  * derived target's `_BASE_VERSION` marker. */
+private[sink] class SyncingSink(base: MergeSink, sync: IngestConfig => Unit)
+    extends MergeSink {
+  def mergeUpsert(batch: DataFrame, config: IngestConfig): Unit = {
+    base.mergeUpsert(batch, config); sync(config)
+  }
+  def mergeSoftDelete(batch: DataFrame, config: IngestConfig): Unit = {
+    base.mergeSoftDelete(batch, config); sync(config)
+  }
+  def mergeHardDelete(batch: DataFrame, config: IngestConfig): Unit = {
+    base.mergeHardDelete(batch, config); sync(config)
+  }
+}

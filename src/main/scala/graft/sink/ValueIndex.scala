@@ -1,8 +1,5 @@
 package graft.sink
 
-import java.nio.charset.StandardCharsets
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -49,25 +46,9 @@ final class ValueIndex(spark: SparkSession, base: ParquetTarget,
     bucketCols = Seq("ival"))
   private val ix = new ParquetTarget(spark, table)
 
-  private val marker = new Path(new Path(path), "_BASE_VERSION")
-  private def fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val marker = new BaseVersionMarker(spark, path)
 
-  def syncedBaseVersion: Option[Long] =
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      val s = try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        StandardCharsets.UTF_8).trim
-      finally in.close()
-      Some(s.toLong)
-    }
-
-  private def writeMarker(v: Long): Unit = {
-    val out = fs.create(marker, true)
-    try out.write(v.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  def syncedBaseVersion: Option[Long] = marker.get
 
   private def project(df: DataFrame): DataFrame =
     df.select((col(indexedCol).as("ival") +:
@@ -81,7 +62,7 @@ final class ValueIndex(spark: SparkSession, base: ParquetTarget,
       throw new IllegalStateException(
         s"cannot index ${base.table.name}: no committed version"))
     ix.mergeUpsert(project(base.read().get), cfg)
-    writeMarker(v)
+    marker.set(v)
   }
 
   /** Incremental sync: apply only the base's change feed since the last
@@ -106,9 +87,13 @@ final class ValueIndex(spark: SparkSession, base: ParquetTarget,
         col("_change_type").isin("insert", "update_postimage")))
       if (!gone.isEmpty) ix.mergeHardDelete(gone, cfg)
       if (!live.isEmpty) ix.mergeUpsert(live, cfg)
-      writeMarker(cur)
+      marker.set(cur)
     } finally org.apache.spark.sql.GraftSql.freeLocalCheckpoint(feed)
   }
+
+  /** Bring the index up to date: bootstrap on first use, else refresh. */
+  private[sink] def sync(cfg: IngestConfig): Unit =
+    if (syncedBaseVersion.isEmpty) rebuild(cfg) else refresh(cfg)
 
   /** Index-accelerated equality lookup: all current base rows whose
     * indexed column equals a value in `vals` (a one-column frame named
@@ -138,17 +123,4 @@ final class ValueIndex(spark: SparkSession, base: ParquetTarget,
   * documented ValueIndex replay case: the next refresh covers the gap
   * from the marker, idempotently. */
 final class IndexedParquetSink(spark: SparkSession, base: ParquetTarget,
-    index: ValueIndex) extends MergeSink {
-  private def sync(cfg: IngestConfig): Unit =
-    if (index.syncedBaseVersion.isEmpty) index.rebuild(cfg)
-    else index.refresh(cfg)
-  def mergeUpsert(batch: DataFrame, config: IngestConfig): Unit = {
-    base.mergeUpsert(batch, config); sync(config)
-  }
-  def mergeSoftDelete(batch: DataFrame, config: IngestConfig): Unit = {
-    base.mergeSoftDelete(batch, config); sync(config)
-  }
-  def mergeHardDelete(batch: DataFrame, config: IngestConfig): Unit = {
-    base.mergeHardDelete(batch, config); sync(config)
-  }
-}
+    index: ValueIndex) extends SyncingSink(base, index.sync)

@@ -348,7 +348,7 @@ class BucketedTargetSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_compact_").toString
     // The engine writes one file per bucket, so the multi-file buckets come
     // from a table the previous writer made (see ParentTable).
-    val t = ParentTable.copyTo(spark, s"$dir/target").copy(retainVersions = 1)
+    val t = ParentTable.copyTo(s"$dir/target").copy(retainVersions = 1)
     val sink = new ParquetTarget(spark, t)
     val wideCfg = IngestConfig(name = "compact-spec", maxWriterPartitions = 8)
     val before = canon(sink.read().get)
@@ -481,11 +481,11 @@ class BucketedTargetSpec extends SparkSpec {
       versionCol = "ver", tieBreakCols = Seq("seq"), buckets = 4)
     val branch = new ParquetTarget(spark, bt)
     // Zero-copy: the branch root holds ONLY metadata (no parquet bytes)
-    // — the manifest, the pointer, and the carried zone-map sidecar.
+    // — the manifest (which carries the zone bounds) and the pointer.
     val broot = new Path(bt.path)
     val fs = broot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.listStatus(broot).map(_.getPath.getName).toSet ==
-      Set("m0000000001", "_LATEST", "z0000000001"))
+      Set("m0000000001", "_LATEST"))
     // The branch reads the source's snapshot through shared files.
     assert(branch.read().get.count() == 16L)
     // Copy-on-write: a one-key branch merge writes ONLY that bucket
@@ -601,6 +601,24 @@ class BucketedTargetSpec extends SparkSpec {
     assert(ix.syncedBaseVersion.get == base.versions().last)
   }
 
+  test("a _BASE_VERSION.tmp left by a crash does not break the next refresh") {
+    val dir = Files.createTempDirectory("graft_vxtmp_").toString
+    val t = TargetTable("t", s"$dir/base", keyCols = Seq("pkey"),
+      versionCol = "ver", tieBreakCols = Seq("seq"), buckets = 4,
+      retainVersions = 4)
+    val base = new ParquetTarget(spark, t)
+    base.mergeUpsert(Seq((1L, 1L, 1L, "red")).toDF("pkey", "ver", "seq", "color"), cfg)
+    val ix = new graft.sink.ValueIndex(spark, base, "color", s"$dir/ix", buckets = 4)
+    ix.rebuild(cfg)
+    // a marker publish that died after creating its tmp file, before the rename
+    Files.write(java.nio.file.Paths.get(s"$dir/ix/_BASE_VERSION.tmp"), Array.emptyByteArray)
+    base.mergeUpsert(Seq((2L, 1L, 2L, "red")).toDF("pkey", "ver", "seq", "color"), cfg)
+    ix.refresh(cfg)
+    assert(ix.syncedBaseVersion.contains(base.versions().last))
+    assert(ix.lookupEq(Seq("red").toDF("ival")).collect().map(_.getLong(0)).sorted.toSeq ==
+      Seq(1L, 2L))
+  }
+
   test("JoinView: incremental refresh equals full re-enrichment through " +
       "insert, update, and delete") {
     import org.apache.spark.sql.functions.{broadcast, col}
@@ -690,8 +708,8 @@ class BucketedTargetSpec extends SparkSpec {
   }
 
   test("rollbackTo: metadata-only restore is bit-identical to the " +
-      "target version, is a NEW commit, and masks later deletion " +
-      "vectors with an empty sidecar") {
+      "target version, is a NEW commit, and applies no later deletion " +
+      "vector") {
     val sink = mkRetained(buckets = 4)
     sink.mergeUpsert((0L until 40L).map(k => (k, 1L, k, s"v1-$k")).toDF
       ("pkey", "ver", "seq", "payload"), cfg)

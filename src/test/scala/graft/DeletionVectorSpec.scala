@@ -158,6 +158,51 @@ class DeletionVectorSpec extends SparkSpec {
     assert(sink.versions().last == vBefore)
   }
 
+  test("a plainly copied table reads, looks up and diffs its vectored deletes " +
+      "like the original") {
+    val (sink, t) = mk()
+    seed(sink) // v1
+    sink.deleteVectored(cfg, col("pkey") % 3L === 0L) // v2
+    sink.mergeUpsert(Seq((1L, 2L, 9L, 1.5), (50L, 2L, 9L, 5.0)).toDF
+      ("pkey", "ver", "seq", "value"), cfg) // v3
+    val dest = Files.createTempDirectory("graft_dvcopy_").resolve("t")
+    val src = java.nio.file.Paths.get(t.path)
+    Files.walk(src).forEach { p =>
+      Files.copy(p, dest.resolve(src.relativize(p).toString))
+      ()
+    }
+    val copy = new ParquetTarget(spark, t.copy(path = dest.toString))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("pkey", "ver", "seq", "value").as[(Long, Long, Long, Double)].collect().toSet
+    assert(rows(copy.read().get) == rows(sink.read().get))
+    assert(rows(copy.read().get).map(_._1) ==
+      (0L until 40L).filterNot(_ % 3 == 0).toSet + 50L)
+    val probe = Seq(0L, 1L, 3L, 4L, 50L, 99L).toDF("pkey")
+    assert(rows(copy.lookup(probe).get) == rows(sink.lookup(probe).get))
+    def feed(s: ParquetTarget, from: Long, to: Long) =
+      s.readChanges(from, to).get.select("pkey", "_change_type").as[(Long, String)].collect().toSet
+    assert(feed(copy, 1L, 2L) == feed(sink, 1L, 2L))
+    assert(feed(copy, 1L, 3L) == feed(sink, 1L, 3L))
+    assert(feed(copy, 1L, 2L).map(_._1) == (0L until 40L).filter(_ % 3 == 0).toSet)
+  }
+
+  test("the root holds no zone file, and a rollback past a vector writes no vector") {
+    val (sink, t) = mk()
+    seed(sink) // v1
+    val root = new Path(t.path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def named(prefix: String) =
+      fs.listStatus(root).map(_.getPath.getName).filter(_.startsWith(prefix)).toSet
+    assert(named("z").isEmpty)
+    assert(sink.zoneMaps().nonEmpty)
+    sink.deleteVectoredKeys(Seq(3L, 17L).toDF("pkey"), cfg) // v2 writes x2
+    assert(named("x") == Set("x0000000002"))
+    sink.rollbackTo(1L) // v3
+    assert(named("x") == Set("x0000000002"), "x2 stays while v2 is retained")
+    assert(sink.read().get.count() == 40L)
+    assert(named("z").isEmpty)
+  }
+
   test("clone carries the vector: branch reads exclude deleted rows") {
     val (sink, t) = mk()
     seed(sink)

@@ -1,13 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.regex.{Matcher, Pattern}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, GraftSql, SparkSession}
-import org.apache.spark.sql.functions.{col, regexp_replace}
+import org.apache.spark.sql.{DataFrame, GraftSql}
 
 import graft.model.{IngestConfig, TargetTable}
 import graft.sink.ParquetTarget
@@ -34,34 +32,17 @@ object ParentTable {
   private def resource: Path =
     Paths.get(getClass.getResource("/graft/parent-table/_LATEST").toURI).getParent
 
-  /** Copy the table to `dest` and return its [[TargetTable]]. Deletion
-    * vectors name data files by absolute URI, so the copy's sidecars are
-    * rewritten to point at the copied files. */
-  def copyTo(spark: SparkSession, dest: String): TargetTable = {
+  /** Copy the table to `dest` with a plain recursive copy and return its
+    * [[TargetTable]]. */
+  def copyTo(dest: String): TargetTable = {
     val src = resource
     val to = Paths.get(dest)
     Files.walk(src).iterator().asScala.foreach { p =>
       val q = to.resolve(src.relativize(p).toString)
       if (Files.isDirectory(p)) Files.createDirectories(q) else Files.copy(p, q)
     }
-    val uri = new HPath(to.toUri).toString.stripSuffix("/")
-    Files.list(to).iterator().asScala.filter(_.getFileName.toString.startsWith("x"))
-      .foreach(x => relocateDv(spark, x, uri))
     TargetTable("legacy", dest, keyCols = Seq("pkey"), versionCol = "ver",
       tieBreakCols = Seq("seq"), buckets = 4, retainVersions = 4)
-  }
-
-  private def relocateDv(spark: SparkSession, x: Path, root: String): Unit = {
-    val dv = spark.read.parquet(x.toString)
-    val old = dv.select("__graft_dv_file").head().getString(0)
-    val oldRoot = old.substring(0, old.indexOf("/d0"))
-    val tmp = x.resolveSibling(x.getFileName.toString + ".relocated")
-    dv.withColumn("__graft_dv_file", regexp_replace(col("__graft_dv_file"),
-        "^" + Pattern.quote(oldRoot), Matcher.quoteReplacement(root)))
-      .write.partitionBy("__graft_dv_bucket").parquet(tmp.toString)
-    org.apache.commons.io.FileUtils.deleteDirectory(x.toFile)
-    Files.move(tmp, x)
-    ()
   }
 
   def rows(df: DataFrame): Map[Long, Rec] =
@@ -83,12 +64,17 @@ class ParentTableSpec extends SparkSpec {
 
   test("a parent-written table reads, looks up, merges, compacts, rolls back and clones") {
     val dir = Files.createTempDirectory("graft_parent_").toString
-    val t = copyTo(spark, s"$dir/table")
+    val t = copyTo(s"$dir/table")
     val sink = new ParquetTarget(spark, t)
     assert(dataFiles(t.path).forall(_.contains(".snappy.")))
 
     assert(sink.versions() == Seq(1L, 2L, 3L, 4L))
     assert(rows(sink.read().get) == v4)
+    assert(sink.read().get.count() == 137L)
+    // zone bounds of a parent manifest come from its z file (z0000000004)
+    assert(sink.zoneMaps() == (0 until 4).map(_ -> ((1L, 2L))).toMap)
+    assert(sink.pruneAudit(3, 3).contains((4, 0, 4)))
+    assert(sink.pruneAudit(2, 2).contains((4, 4, 0)))
     assert(rows(sink.readVersion(3).get) == v3)
     assert(rows(sink.readVersion(2).get) == v2)
     assert(sink.readVersion(1).get.select("pkey", "ver", "seq", "payload").collect()
@@ -135,7 +121,7 @@ class ParentTableSpec extends SparkSpec {
 
   test("the footer schema equals Spark's inferred schema for parent and new files") {
     val dir = Files.createTempDirectory("graft_parent_schema_").toString
-    val t = copyTo(spark, s"$dir/table")
+    val t = copyTo(s"$dir/table")
     val sink = new ParquetTarget(spark, t)
     sink.mergeUpsert(Seq((1L, 9L, 0L, "n")).toDF("pkey", "ver", "seq", "payload"), cfg)
     val conf = spark.sparkContext.hadoopConfiguration
